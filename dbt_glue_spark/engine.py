@@ -1328,39 +1328,3 @@ class Engine:
             snap = snap.localCheckpoint(eager=True)
         return self._write_swap(snap, model, op="SNAPSHOT")
 
-
-def run_tests(
-    engine: Engine,
-    model_name: str,
-    tests: list[tuple[str, dict]],
-) -> dict[str, int]:
-    """Run data-quality tests against a materialized model; returns
-    test-name → failing-row count (0 = pass), dbt's test loop in one call.
-
-    ``tests`` entries: (test_type, params) with test_type in unique /
-    not_null / accepted_values / relationships (quality/tests.py).
-    """
-    from dbt_glue_spark.quality import tests as dq
-
-    df = engine.ref_df(model_name)
-    results: dict[str, int] = {}
-    for ttype, params in tests:
-        if ttype == "unique":
-            fail = dq.unique(df, params["column"])
-        elif ttype == "not_null":
-            fail = dq.not_null(df, params["column"])
-        elif ttype == "accepted_values":
-            fail = dq.accepted_values(
-                df, params["column"], params["values"], params.get("quote", True)
-            )
-        elif ttype == "relationships":
-            fail = dq.relationships(
-                df,
-                params["column"],
-                engine.ref_df(params["to"]),
-                params["field"],
-            )
-        else:
-            raise ValueError(f"unknown test {ttype}")
-        results[f"{ttype}:{params.get('column', '')}"] = fail.count()
-    return results

@@ -5,6 +5,9 @@ Each :class:`QuerySpec` pairs a Spark DataFrame implementation (a callable
 string (or ``None`` for non-SQL-expressible operators → the driver records a
 rows-only check).
 
+:func:`register` is the only way a query enters the catalog; ``SPECS()``
+lists queries in the import order of the plan modules in ``_load_all``.
+
 Cross-engine determinism rules used throughout (so the driver's
 order-insensitive value-hash matches):
 
@@ -19,10 +22,6 @@ order-insensitive value-hash matches):
 
 from __future__ import annotations
 
-import glob
-import json
-import os
-import re
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -41,7 +40,15 @@ _REGISTRY: dict[str, QuerySpec] = {}
 
 
 def register(name: str, oracle: str | None, doc: str = ""):
+    """Decorator adding ``(spark, sf_dir) -> DataFrame`` to the catalog.
+
+    The only way an operator enters the catalog; a name registered twice
+    raises instead of silently shadowing the first spec.
+    """
+
     def deco(fn: Callable[[SparkSession, str], DataFrame]):
+        if name in _REGISTRY:
+            raise ValueError(f"catalog query {name!r} is already registered")
         _REGISTRY[name] = QuerySpec(name, fn, oracle, doc)
         return fn
 
@@ -55,176 +62,24 @@ def _load_all() -> None:
     from dbt_glue_spark.plans import materialization_queries  # noqa: F401
     from dbt_glue_spark.plans import extension_queries  # noqa: F401
     from dbt_glue_spark.plans import udf_queries  # noqa: F401
-
-    # Round-7 promotion: the 16 operators staged (and parity-proven) during
-    # round 6 join the live catalog. Staging-then-promoting at round
-    # boundaries is the standing rule — mid-round additions would dilute
-    # the driver's sampled correctness prefix (see round7_staged docstring).
-    from dbt_glue_spark.plans import round7_staged
-
-    _REGISTRY.update(round7_staged.STAGED())
-
-    # Round-8 promotion: the 6 operators staged (and ×7-profile
-    # parity-proven) during round 7 join the live catalog (230 → 236).
-    from dbt_glue_spark.plans import round8_staged
-
-    _REGISTRY.update(round8_staged.STAGED8())
-
-    # Round-9 promotion: the 10 operators staged (and ×8-profile
-    # parity-proven) during round 8 join the live catalog (236 → 246).
-    from dbt_glue_spark.plans import round9_staged
-
-    _REGISTRY.update(round9_staged.STAGED9())
-
-    # Round-10 promotion: the 24 operators staged (and ×11-axis
-    # parity-proven) during round 9 join the live catalog (246 → 270):
-    # the crawl/URL tier, token-budget mixture tier, Gopher quality
-    # flags, nonfinite audits, and the SFT/chat tier.
-    from dbt_glue_spark.plans import round10_staged
-
-    _REGISTRY.update(round10_staged.STAGED10())
-
-    # Round-11 promotion: the 13 operators staged (and ×12-directory
-    # exact-parity-proven) during round 10 join the live catalog
-    # (270 → 283): the multimodal-dedup tier on REAL decoders
-    # (perceptual image/video/audio near-dup, scene/keyframe manifests,
-    # decode audit, media data card), the k-anonymity / l-diversity
-    # privacy censuses, and the streaming image frontier.
-    from dbt_glue_spark.plans import round11_staged
-
-    _REGISTRY.update(round11_staged.STAGED11())
-
-    # Round-12 promotion: the 9 operators staged (and ×12-directory
-    # exact-parity-proven) during round 11 join the live catalog
-    # (283 → 292): the cross-modal pair tier (caption consistency/spam
-    # censuses, paired keep-best with joint-class survivor consistency,
-    # modality mixture card, paired contamination, pair completeness/
-    # alignment) and the streaming mixture monitor + pair frontier.
-    from dbt_glue_spark.plans import round12_staged
-
-    _REGISTRY.update(round12_staged.STAGED12())
-
-
-def _family(name: str) -> str:
-    """Coarse operator family, by naming convention."""
-    for prefix in ("ext_", "mat_", "dq_", "udf_", "udtf_", "streaming_"):
-        if name.startswith(prefix):
-            return prefix
-    if name.startswith("q") and name[1:2].isdigit():
-        return "tpch"
-    return "relational"
-
-
-def _previously_checked(root: str | None = None) -> set[str]:
-    """Query names with a fully GREEN driver CORRECTNESS_r*.json row.
-
-    The external correctness gate samples a prefix of this catalog each
-    round; without rotation the same prefix gets re-checked forever while
-    the tail never earns a hard row. Reading the accumulated result files
-    (written to the repo root by the harness) lets the catalog deprioritize
-    already-checked queries so each round's sample automatically covers the
-    largest never-checked set. Deterministic within a round: the result
-    files only change between rounds.
-
-    Only a query whose LATEST row passed counts as checked: a query whose
-    most recent row is an ``err`` or a mismatch re-enters the sampled
-    prefix, so a fix earns a fresh green driver row the following round
-    instead of being deprioritized alongside genuine passes (this bit r2's
-    two err rows — both green in r1, red in r2 — which never got
-    re-sampled in r3/r4 because *any* historical row counted). Rows-only
-    checks (oracle-less queries, where the driver records null matches but
-    no ``err``) still count — re-sampling them would never produce a
-    stronger signal.
-    """
-    if root is None:
-        root = os.path.dirname(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        )
-    latest_green: dict[str, bool] = {}
-
-    def _round_no(path: str) -> int:
-        # numeric round order, NOT lexicographic: "r100.json" would sort
-        # between r10 and r11 and let older rows overwrite newer ones
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        return int(m.group(1)) if m else -1
-
-    # later files overwrite, so each query's entry reflects its latest row
-    for path in sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json")), key=_round_no):
-        try:
-            with open(path) as fh:
-                rows = json.load(fh)
-        except (OSError, ValueError):
-            continue
-        for name, row in rows.items():
-            if not isinstance(row, dict):
-                latest_green[name] = True
-                continue
-            matches = [
-                row.get("rows_match"),
-                row.get("schema_match"),
-                row.get("hash_match"),
-            ]
-            green = not row.get("err") and not any(m is False for m in matches)
-            latest_green[name] = green
-    return {name for name, green in latest_green.items() if green}
-
-
-def _interleave(specs: list[QuerySpec]) -> list[QuerySpec]:
-    """Round-robin a spec list across operator families.
-
-    Catalog consumers that sample a prefix (the driver correctness gate
-    checks the first N entries) would otherwise only ever see the first
-    registered module's queries — all relational. Interleaving makes any
-    prefix of the catalog span relational + TPC-H + materializations +
-    extensions + UDF families, so sampled correctness carries signal for
-    every operator class. Deterministic: intra-family registration order
-    is preserved, families rotate in fixed order.
-    """
-    buckets: dict[str, list[QuerySpec]] = {}
-    for spec in specs:
-        buckets.setdefault(_family(spec.name), []).append(spec)
-    order = ["relational", "ext_", "mat_", "tpch", "dq_", "udf_", "udtf_", "streaming_"]
-    families = [buckets[f] for f in order if f in buckets]
-    families += [b for f, b in buckets.items() if f not in order]
-    out: list[QuerySpec] = []
-    i = 0
-    while any(families):
-        for fam in families:
-            if i < len(fam):
-                out.append(fam[i])
-        i += 1
-        if all(i >= len(fam) for fam in families):
-            break
-    return out
-
-
-def _interleaved() -> dict[str, QuerySpec]:
-    """Family-interleaved catalog with never-driver-checked queries first.
-
-    Two-tier ordering: queries with no row in any past CORRECTNESS_r*.json
-    come first (family-interleaved), then the already-checked remainder
-    (also family-interleaved). A prefix sample therefore (a) spans operator
-    families and (b) rotates across rounds — as result files accumulate,
-    the unchecked tier shrinks and previously-tail queries surface.
-    """
-    checked = _previously_checked()
-    fresh = [s for s in _REGISTRY.values() if s.name not in checked]
-    stale = [s for s in _REGISTRY.values() if s.name in checked]
-    return {s.name: s for s in _interleave(fresh) + _interleave(stale)}
+    from dbt_glue_spark.plans import round7_staged  # noqa: F401
+    from dbt_glue_spark.plans import round8_staged  # noqa: F401
+    from dbt_glue_spark.plans import round9_staged  # noqa: F401
+    from dbt_glue_spark.plans import round10_staged  # noqa: F401
+    from dbt_glue_spark.plans import round11_staged  # noqa: F401
+    from dbt_glue_spark.plans import round12_staged  # noqa: F401
+    from dbt_glue_spark.plans import round13_staged  # noqa: F401
 
 
 def QUERIES() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    _load_all()
-    return {name: spec.fn for name, spec in _interleaved().items()}
+    return {name: spec.fn for name, spec in SPECS().items()}
 
 
 def ORACLES() -> dict[str, str]:
-    _load_all()
-    return {
-        name: spec.oracle for name, spec in _interleaved().items() if spec.oracle
-    }
+    return {name: spec.oracle for name, spec in SPECS().items() if spec.oracle}
 
 
 def SPECS() -> dict[str, QuerySpec]:
+    """Every registered query, in registration (import) order."""
     _load_all()
-    return _interleaved()
+    return dict(_REGISTRY)

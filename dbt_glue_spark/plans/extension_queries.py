@@ -1932,8 +1932,7 @@ def ext_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sampling.stratified_sample(deduped, ["lang_pred"], "doc_id", 0.5)
 
 
-@register(
-    "ext_contamination_pairs",
+_CONTAMINATION_PAIRS_ORACLE = (
     "WITH "
     + _TOK.replace("FROM documents", "FROM documents WHERE source <> 'src0'")
     + r""",
@@ -1962,7 +1961,13 @@ def ext_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM sh JOIN bsh USING (shingle)
     GROUP BY a_id, b_id
     HAVING COUNT(*) >= 5
-    """,
+    """
+)
+
+
+@register(
+    "ext_contamination_pairs",
+    _CONTAMINATION_PAIRS_ORACLE,
     doc="Train/test decontamination: training docs (source≠src0) sharing "
     "≥5 distinct 3-grams with any eval doc (source=src0). Inverted-index "
     "A⋈B join — never A×A — with the tiny eval side broadcastable; count "

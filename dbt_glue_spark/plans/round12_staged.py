@@ -1,7 +1,6 @@
-"""Round-12 STAGED queries — built and parity-proven during round 11,
-to be promoted at the round-11→12 boundary (standing rule: new operators
-stage mid-round so the driver's sampled correctness prefix stays closed
-over the live catalog, and promote only between rounds).
+"""Round-12 catalog queries, registered through :func:`catalog.register`
+with the same :class:`QuerySpec` contract and exact-DuckDB oracles as
+the rest of the catalog (tests/test_round12_staged.py).
 
 The tier is the r10 VERDICT "Next round" item-6 brief — CROSS-MODAL
 PAIRS, the one LLM-pipeline seam with analysis on both sides (text
@@ -55,29 +54,15 @@ doc_id % 17 == 0 → undecodable bytes; both drop from joint classes.
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
+from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dbt_glue_spark.plans.catalog import QuerySpec
+from dbt_glue_spark.plans.catalog import register
 from dbt_glue_spark.plans.round11_staged import synth_image_bytes
 from dbt_glue_spark.sources.registry import load_table
-
-_STAGED12: dict[str, QuerySpec] = {}
-
-
-def register_staged(name: str, oracle: str | None, doc: str = ""):
-    def deco(fn: Callable[[SparkSession, str], DataFrame]):
-        _STAGED12[name] = QuerySpec(name, fn, oracle, doc)
-        return fn
-
-    return deco
-
-
-def STAGED12() -> dict[str, QuerySpec]:
-    return dict(_STAGED12)
 
 
 def synth_caption(doc_id: int) -> str | None:
@@ -136,7 +121,7 @@ _CAP = """CASE WHEN doc_id % 13 = 0 THEN 'stock'
 # ---------------------------------------------------------------------------
 
 
-@register_staged(
+@register(
     "ext_caption_consistency",
     f"""
     WITH m AS (
@@ -174,7 +159,7 @@ def ext_caption_consistency(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register_staged(
+@register(
     "ext_caption_spam",
     f"""
     WITH m AS (
@@ -207,7 +192,7 @@ def ext_caption_spam(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register_staged(
+@register(
     "ext_paired_keep_best",
     f"""
     WITH m AS (
@@ -255,7 +240,7 @@ def ext_paired_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
 _MMC_BUDGET = 2_000
 
 
-@register_staged(
+@register(
     "ext_modality_mixture_card",
     f"""
     WITH per AS (
@@ -373,7 +358,7 @@ def ext_modality_mixture_card(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register_staged(
+@register(
     "ext_paired_contamination",
     f"""
     WITH m AS (
@@ -417,7 +402,7 @@ def ext_paired_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register_staged(
+@register(
     "ext_pair_completeness",
     """
     WITH m AS (
@@ -480,7 +465,7 @@ def _alignment_oracle() -> str:
     """
 
 
-@register_staged(
+@register(
     "ext_pair_alignment",
     _alignment_oracle(),
     doc="Cross-modal embedding alignment histogram "
@@ -525,7 +510,7 @@ def ext_pair_alignment(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register_staged(
+@register(
     "streaming_mixture_monitor",
     """
     WITH per AS (
@@ -650,7 +635,7 @@ def streaming_mixture_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register_staged(
+@register(
     "streaming_pair_frontier",
     f"""
     WITH m AS (

@@ -1,13 +1,8 @@
-"""Round-8 STAGED queries — built and parity-proven during round 7,
-promoted at the round-7→8 boundary (standing rule from VERDICT r6: new
-operators stage mid-round so the driver's sampled correctness prefix
-stays closed over the live catalog, and promote only between rounds).
+"""Round-8 catalog queries, registered through :func:`catalog.register`
+with the same :class:`QuerySpec` contract and exact-DuckDB oracles as
+the rest of the catalog (tests/test_round8_staged.py, ×7 data profiles).
 
-Same :class:`QuerySpec` contract and exact-DuckDB gates as the round-7
-pool (tests/test_round8_staged.py, ×7 data profiles). Promotion = merge
-``STAGED8()`` into ``catalog._load_all`` exactly like round7_staged.
-
-The three operators close VERDICT r6 item 4 (the next staged tier):
+The three operators close VERDICT r6 item 4:
 
 - ``ext_exact_substring_spans`` — stride-1 Lee-et-al. ExactSubstr
   coverage (dedup.exact_substring_spans);
@@ -21,33 +16,18 @@ The three operators close VERDICT r6 item 4 (the next staged tier):
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dbt_glue_spark.extensions import dedup
-from dbt_glue_spark.plans.catalog import QuerySpec
+from dbt_glue_spark.plans.catalog import register
+from dbt_glue_spark.plans.round7_staged import _WEIGHTED_SAMPLE_ORACLE
 from dbt_glue_spark.sources.registry import load_table
-
-_STAGED8: dict[str, QuerySpec] = {}
-
-
-def register_staged(name: str, oracle: str | None, doc: str = ""):
-    def deco(fn: Callable[[SparkSession, str], DataFrame]):
-        _STAGED8[name] = QuerySpec(name, fn, oracle, doc)
-        return fn
-
-    return deco
-
-
-def STAGED8() -> dict[str, QuerySpec]:
-    return dict(_STAGED8)
 
 
 _ESS_L = 16
 
-@register_staged(
+@register(
     "ext_exact_substring_spans",
     rf"""
     WITH tok AS (
@@ -188,7 +168,7 @@ def _compaction_oracle() -> str:
     """
 
 
-@register_staged(
+@register(
     "ext_ledger_compaction",
     _compaction_oracle(),
     doc="Cross-run near-dup ledger compaction (dedup.compact_band_ledger "
@@ -235,17 +215,11 @@ def ext_ledger_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PS_K = 256
 
 
-def _priority_sample_oracle() -> str:
-    # the streamed ledger must equal the ONE-SHOT batch sample exactly —
-    # reuse the promoted batch query's oracle verbatim (same k/seed/space)
-    from dbt_glue_spark.plans.round7_staged import STAGED
-
-    return STAGED()["ext_weighted_sample"].oracle
-
-
-@register_staged(
+@register(
     "streaming_priority_sample",
-    _priority_sample_oracle(),
+    # the streamed ledger must equal the ONE-SHOT batch sample exactly —
+    # reuse the batch query's oracle verbatim (same k/seed/space)
+    _WEIGHTED_SAMPLE_ORACLE,
     doc="Streaming twin of ext_weighted_sample "
     "(streaming/pipelines.priority_sample_stream_sink): documents staged "
     "as a 3-file stream; each micro-batch's bottom-(k+1) rows by the "
@@ -297,7 +271,7 @@ def streaming_priority_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_staged(
+@register(
     "ext_cusum_changepoints",
     """
     WITH base AS (
@@ -360,7 +334,7 @@ def ext_cusum_changepoints(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_staged(
+@register(
     "ext_sorted_neighborhood",
     r"""
     WITH base AS (
@@ -397,7 +371,7 @@ def ext_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_staged(
+@register(
     "ext_interval_overlap_join",
     """
     WITH a AS (

@@ -1,17 +1,11 @@
-"""Round-9 pool — built and parity-proven during round 8, PROMOTED into
-the live catalog at the round-8→9 boundary (catalog 236 → 246; standing
-rule: new operators stage mid-round so the driver's sampled correctness
-prefix stays closed over the live catalog, and promote only between
-rounds).
+"""Round-9 catalog queries, registered through :func:`catalog.register`
+with the same :class:`QuerySpec` contract and exact-DuckDB oracles as
+the rest of the catalog (tests/test_round9_staged.py, every
+pathological data profile).
 
-Same :class:`QuerySpec` contract and exact-DuckDB gates as the earlier
-pools (tests/test_round9_staged.py, every pathological data profile).
-``STAGED9()`` is merged into ``catalog._load_all`` exactly like
-round7_staged/round8_staged.
-
-The first three operators close VERDICT r7 item 4 (the next staged
-tier); the last two extend the corpus-audit family with the GROWTH
-view (the static spectrum lives in zipf_rank_buckets):
+The first three operators close VERDICT r7 item 4; the last two extend
+the corpus-audit family with the GROWTH view (the static spectrum lives
+in zipf_rank_buckets):
 
 - ``ext_psi_js_drift`` — per-feature PSI + Jensen–Shannon drift
   (audit.psi_js_drift), the log-based half of the drift kit next to
@@ -32,28 +26,12 @@ view (the static spectrum lives in zipf_rank_buckets):
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dbt_glue_spark.extensions.sketches import _duck_hash_int
-from dbt_glue_spark.plans.catalog import QuerySpec
+from dbt_glue_spark.plans.catalog import register
 from dbt_glue_spark.sources.registry import load_table
-
-_STAGED9: dict[str, QuerySpec] = {}
-
-
-def register_staged(name: str, oracle: str | None, doc: str = ""):
-    def deco(fn: Callable[[SparkSession, str], DataFrame]):
-        _STAGED9[name] = QuerySpec(name, fn, oracle, doc)
-        return fn
-
-    return deco
-
-
-def STAGED9() -> dict[str, QuerySpec]:
-    return dict(_STAGED9)
 
 
 # ---------------------------------------------------------------------------
@@ -128,7 +106,7 @@ def _psi_feature_sql(feature: str, expr: str) -> str:
 _N_TOKENS_SQL = r"len(list_filter(string_split_regex(text, '\s+'), t -> t <> ''))"
 
 
-@register_staged(
+@register(
     "ext_psi_js_drift",
     "WITH "
     + _B_SNAP
@@ -188,7 +166,7 @@ _PW_W = "GREATEST(COALESCE(CAST(n_chars AS BIGINT), 1), 1)"
 _U_DEN = float(16**13)  # 2^52: (h+1)/2^52 is an exact IEEE division
 
 
-@register_staged(
+@register(
     "ext_ppswor_sample",
     f"""
     WITH pri AS (
@@ -250,13 +228,12 @@ def ext_ppswor_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 # training corpus equals the one-shot pairs (postings join
 # row-independently; each a_id lives in exactly one batch), so the
 # oracle IS ext_contamination_pairs' SQL — imported, not duplicated.
-from dbt_glue_spark.plans import extension_queries  # noqa: E402,F401
-from dbt_glue_spark.plans.catalog import _REGISTRY as _CAT  # noqa: E402
+from dbt_glue_spark.plans.extension_queries import (  # noqa: E402
+    _CONTAMINATION_PAIRS_ORACLE as _CONTAM_ORACLE,
+)
 
-_CONTAM_ORACLE = _CAT["ext_contamination_pairs"].oracle
 
-
-@register_staged(
+@register(
     "ext_contamination_ledger",
     _CONTAM_ORACLE,
     doc="Cross-run train/eval decontamination (dedup.contamination_ledger "
@@ -304,7 +281,7 @@ _VG_BUCKET = f"""CASE WHEN mx = mn THEN 0
                          {_VG_NB - 1}) AS INT) END"""
 
 
-@register_staged(
+@register(
     "ext_vocab_growth",
     f"""
     WITH st AS (
@@ -356,7 +333,7 @@ def ext_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_staged(
+@register(
     "ext_ngram_novelty",
     rf"""
     WITH st AS (
@@ -429,7 +406,7 @@ from dbt_glue_spark.plans.extension_queries import (  # noqa: E402
 _LSH_CAP = 64
 
 
-@register_staged(
+@register(
     "ext_minhash_lsh_capped",
     "WITH "
     + _MINHASH_SIG
@@ -498,7 +475,7 @@ def ext_minhash_lsh_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register_staged(
+@register(
     "ext_containment_pairs",
     r"""
     WITH tok AS (
@@ -563,7 +540,7 @@ from dbt_glue_spark.plans.extension_queries import _SH  # noqa: E402
 _SIG_ONLY = _MINHASH_SIG.removeprefix(_SH)
 
 
-@register_staged(
+@register(
     "ext_lsh_recall_audit",
     "WITH "
     + _SH
@@ -621,7 +598,7 @@ def ext_lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register_staged(
+@register(
     "streaming_psi_drift",
     f"""
     WITH ha AS (
@@ -713,7 +690,7 @@ def streaming_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register_staged(
+@register(
     "ext_psi_drift_by_source",
     f"""
     WITH b_snap AS (

@@ -23,15 +23,11 @@ One pass over the catalog applies two gates:
    un-orderable cell type fails here even if the Spark schema looked
    flat.
 
-Gate 2 executes results, so it runs on a deterministic rotating subset
-unless ``SPARK_GRAFT_CONTRACT_FULL=1`` (the full sweep is what pre-round
-validation should run; see ``tools/check_parity.py`` for the stronger
-value-level equivalent).
+Gate 2 executes every result, so the test is marked ``slow``; see
+``tools/check_parity.py`` for the stronger value-level equivalent.
 """
 
 from __future__ import annotations
-
-import os
 
 import pytest
 from pyspark.sql import types as T
@@ -52,24 +48,13 @@ def _driver_canon(pdf):
 
 @pytest.mark.slow
 def test_driver_contract_catalog_wide(spark, sf_dir):
-    """Single pass: build every catalog plan once; flat-schema gate for
-    all queries, canonicalization round-trip for the rotating subset
-    (all queries under SPARK_GRAFT_CONTRACT_FULL=1)."""
-    specs = SPECS()
-    names = list(specs)
-    if os.environ.get("SPARK_GRAFT_CONTRACT_FULL") == "1":
-        roundtrip = set(names)
-    else:
-        # Deterministic subset: the catalog's sampled prefix (what the
-        # driver will actually check next round) plus every 7th of the
-        # rest, so repeated suite runs still sweep the whole catalog as
-        # the rotation advances.
-        roundtrip = set(names[:60] + names[60::7])
+    """Single pass: build every catalog plan once, then apply the
+    flat-schema gate and the canonicalization round-trip to each."""
     schema_offenders: list[str] = []
     failures: list[str] = []
-    for name in names:
+    for name, spec in SPECS().items():
         try:
-            df = specs[name].fn(spark, sf_dir)
+            df = spec.fn(spark, sf_dir)
         except Exception as exc:  # noqa: BLE001
             failures.append(f"{name}: build failed: {type(exc).__name__}: {exc}")
             continue
@@ -78,11 +63,10 @@ def test_driver_contract_catalog_wide(spark, sf_dir):
                 schema_offenders.append(
                     f"{name}.{field.name}: {field.dataType.simpleString()}"
                 )
-        if name in roundtrip:
-            try:
-                _driver_canon(df.limit(200).toPandas())
-            except Exception as exc:  # noqa: BLE001
-                failures.append(f"{name}: {type(exc).__name__}: {exc}")
+        try:
+            _driver_canon(df.limit(200).toPandas())
+        except Exception as exc:  # noqa: BLE001
+            failures.append(f"{name}: {type(exc).__name__}: {exc}")
     assert not schema_offenders, (
         "nested result columns break the driver canonicalizer "
         "(pandas sort_values over unhashable cells) — serialize with "
@@ -100,3 +84,16 @@ def test_r4_regression_array_agg_serialized(spark, sf_dir, query):
     pdf = df.toPandas()
     _driver_canon(pdf)  # must not raise
     assert (pdf["statuses"].str.match(r"^[A-Z](,[A-Z])*$")).all()
+
+
+def test_catalog_registers_303_queries_once():
+    """``register`` is the only way into the catalog: 303 queries, and a
+    second registration of a taken name raises instead of shadowing it."""
+    from dbt_glue_spark.plans.catalog import register
+
+    specs = SPECS()
+    assert len(specs) == 303, len(specs)
+    name, spec = next(iter(specs.items()))
+    with pytest.raises(ValueError, match=name):
+        register(name, None)(lambda spark, sf_dir: None)
+    assert SPECS()[name] is spec

@@ -329,38 +329,39 @@ def test_execute_script_and_fetch(engine, spark):
 
 
 def test_run_tests_loop(engine):
-    from dbt_glue_spark.engine import run_tests
-
-    engine.add(Model("base", seed_csv=BASE_CSV, config=ModelConfig(materialized="seed")))
+    """The four generic tests through ``Model.tests`` + ``Engine.test``."""
+    engine.add(
+        Model(
+            "base",
+            seed_csv=BASE_CSV,
+            config=ModelConfig(materialized="seed"),
+            tests={
+                "id": ["unique"],
+                "email": ["not_null"],
+                "gender": [{"accepted_values": {"values": ["Male", "Female"]}}],
+            },
+        )
+    )
     engine.add(
         Model(
             "kids",
             sql="select id + 20 as id, id as parent_id from {{ ref('base') }}",
             config=ModelConfig(materialized="table"),
+            tests={"parent_id": [{"relationships": {"to": "base", "field": "id"}}]},
         )
     )
     engine.run()
-    res = run_tests(
-        engine,
-        "base",
-        [
-            ("unique", {"column": "id"}),
-            ("not_null", {"column": "email"}),
-            ("accepted_values", {"column": "gender", "values": ["Male", "Female"]}),
-        ],
-    )
-    assert all(v == 0 for v in res.values())
-    res2 = run_tests(
-        engine,
-        "kids",
-        [("relationships", {"column": "parent_id", "to": "base", "field": "id"})],
-    )
-    assert res2["relationships:parent_id"] == 0
+    report = {(r.model, r.column, r.test): r.n_failures for r in engine.test().collect()}
+    assert report == {
+        ("base", "id", "unique"): 0,
+        ("base", "email", "not_null"): 0,
+        ("base", "gender", "accepted_values"): 0,
+        ("kids", "parent_id", "relationships"): 0,
+    }
     # violation: accepted_values missing one category
-    res3 = run_tests(
-        engine, "base", [("accepted_values", {"column": "gender", "values": ["Male"]})]
-    )
-    assert res3["accepted_values:gender"] == 1
+    engine.models["base"].tests = {"gender": [{"accepted_values": {"values": ["Male"]}}]}
+    (row,) = engine.test(["base"]).collect()
+    assert (row.test, row.n_failures, row.passed) == ("accepted_values", 1, False)
 
 
 def test_python_model_incremental_merge(engine):

@@ -1,8 +1,6 @@
-"""Round-10 pool: staged and parity-proven during round 9, PROMOTED at
-the round-9→10 boundary (catalog 246 → 270; plans/round10_staged.py
-docstring). These tests prove the specs with the same exact DuckDB
-compare the live sweep uses, pin the promotion contract
-rotation-invariantly, and brute-force / property-check each operator.
+"""Round-10 catalog operators (plans/round10_staged.py): brute-force /
+property checks for each operator. Their exact DuckDB-oracle compare
+runs in the catalog-wide parity sweep (tests/test_parity_sweep.py).
 """
 
 from __future__ import annotations
@@ -12,56 +10,18 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from dbt_glue_spark.plans.round10_staged import STAGED10
-from tools.check_parity import duck_con, normalize, values_equal
+from dbt_glue_spark.plans import round10_staged
+from dbt_glue_spark.plans.catalog import SPECS
 
-# Promotion-gate / full-sweep module: deselected by default so the suite
+# Heavy module: deselected by default so the suite
 # fits the driver's pytest window (r12 verdict item 3); `pytest -m slow` runs it.
 pytestmark = pytest.mark.slow
 
-STAGED10_NAMES = sorted(STAGED10())
-
-
-def _exact_compare(spark, sf_dir, spec):
-    sdf = spec.fn(spark, sf_dir)
-    scols = sdf.columns
-    srows = [tuple(r) for r in sdf.collect()]
-    con = duck_con(sf_dir)
-    try:
-        res = con.execute(spec.oracle)
-        dcols = [d[0] for d in res.description]
-        drows = res.fetchall()
-    finally:
-        con.close()
-    assert sorted(scols) == sorted(dcols), (scols, dcols)
-    sn, dn = normalize(srows, scols), normalize(drows, dcols)
-    assert len(sn) == len(dn), (len(sn), len(dn))
-    for r1, r2 in zip(sn, dn):
-        assert all(values_equal(a, b) for a, b in zip(r1, r2)), (r1, r2)
-
-
-@pytest.mark.parametrize("name", STAGED10_NAMES)
-def test_staged10_oracle_parity(spark, sf_dir, name):
-    _exact_compare(spark, sf_dir, STAGED10()[name])
-
-
-def test_staged10_promoted_and_sampled_first():
-    """Round-10 promotion contract (rotation-invariant form, per the r7
-    verdict's time-bomb lesson): the 24 staged operators are live in the
-    catalog (246 + 24 = 270), and any of them WITHOUT a green latest
-    driver CORRECTNESS row sits in the driver's 50-query sampled prefix
-    — true before the driver run (all 24 in the never-checked tier) and
-    after it (green rows rotate out, red rows must re-enter)."""
-    from dbt_glue_spark.plans.catalog import SPECS, _previously_checked
-
-    specs = SPECS()
-    assert len(specs) >= 270, len(specs)  # 270 at r10; later rounds promote more
-    missing = set(STAGED10_NAMES) - set(specs)
-    assert not missing, missing
-    prefix = set(list(specs)[:50])
-    unchecked = set(STAGED10_NAMES) - _previously_checked()
-    not_in_prefix = unchecked - prefix
-    assert not not_in_prefix, not_in_prefix
+ROUND10_SPECS = {
+    name: spec
+    for name, spec in SPECS().items()
+    if spec.fn.__module__ == round10_staged.__name__
+}
 
 
 # ---------------------------------------------------------------------------
@@ -304,9 +264,7 @@ def test_gopher_flags_map_only_plan(spark, sf_dir):
 def test_url_dedup_groupby_plan(spark, sf_dir):
     """url_dedup's only wide op is the canonical-URL groupBy (with a
     map-side partial aggregate); never a join or a window."""
-    from dbt_glue_spark.plans.round10_staged import STAGED10
-
-    df = STAGED10()["ext_url_dedup"].fn(spark, sf_dir)
+    df = SPECS()["ext_url_dedup"].fn(spark, sf_dir)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange") == 1, plan
     assert "HashAggregate" in plan
@@ -537,15 +495,12 @@ def test_streaming_url_frontier_equals_batch(spark, sf_dir):
     """Kappa twin: the streaming frontier's emitted canon_url set must
     equal the batch operator's, regardless of file arrival order."""
     from dbt_glue_spark.extensions.web import url_frontier_new
-    from dbt_glue_spark.plans.round10_staged import (
-        STAGED10,
-        _synth_url_spark,
-    )
+    from dbt_glue_spark.plans.round10_staged import _synth_url_spark
     from dbt_glue_spark.sources.registry import load_table
 
     stream_rows = {
         r.canon_url
-        for r in STAGED10()["streaming_url_frontier"].fn(spark, sf_dir).collect()
+        for r in SPECS()["streaming_url_frontier"].fn(spark, sf_dir).collect()
     }
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", _synth_url_spark(F.col("doc_id")).alias("url")
@@ -574,7 +529,7 @@ def test_staged10_survive_empty_input(spark, tmp_path_factory):
             "overwrite"
         ).parquet(os.path.join(out, f"{t}.parquet"))
     failures = []
-    for name, spec in sorted(STAGED10().items()):
+    for name, spec in sorted(ROUND10_SPECS.items()):
         try:
             spec.fn(spark, out).limit(5).toPandas()
         except Exception as exc:  # noqa: BLE001
@@ -612,9 +567,7 @@ def test_keep_best_hand_case(spark):
 def test_keep_best_single_exchange_plan(spark, sf_dir):
     """One groupBy, no join, no window: exactly one Exchange in the plan
     (AQE may append reads, never a second shuffle or a SortMergeJoin)."""
-    from dbt_glue_spark.plans.round10_staged import STAGED10
-
-    plan = STAGED10()["ext_dedup_keep_best"].fn(
+    plan = SPECS()["ext_dedup_keep_best"].fn(
         spark, sf_dir
     )._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange hashpartitioning") == 1, plan
@@ -1087,15 +1040,13 @@ def test_chat_single_exchange_plans(spark, sf_dir):
     """The conv-keyed operators plan exactly ONE exchange (every window
     and the final groupBy share the conv_id partitioning); the audit
     groupBys shuffle only hash-sized keys."""
-    from dbt_glue_spark.plans.round10_staged import STAGED10
-
     for name, n_exchanges in (
         ("ext_chat_turn_validation", 1),
         ("ext_chat_truncation_plan", 1),
         ("ext_preference_length_bias", 1),
     ):
         plan = (
-            STAGED10()[name]
+            SPECS()[name]
             .fn(spark, sf_dir)
             ._jdf.queryExecution()
             .executedPlan()
@@ -1108,15 +1059,12 @@ def test_chat_single_exchange_plans(spark, sf_dir):
 def test_streaming_chat_response_dedup_equals_batch(spark, sf_dir):
     """Kappa equivalence: the streamed response frontier equals the batch
     set (distinct assistant-text md5s minus the ledger's) exactly."""
-    from dbt_glue_spark.plans.round10_staged import (
-        STAGED10,
-        _synth_role_spark,
-    )
+    from dbt_glue_spark.plans.round10_staged import _synth_role_spark
     from dbt_glue_spark.sources.registry import load_table
 
     got = {
         r.resp_hash
-        for r in STAGED10()["streaming_chat_response_dedup"]
+        for r in SPECS()["streaming_chat_response_dedup"]
         .fn(spark, sf_dir)
         .collect()
     }

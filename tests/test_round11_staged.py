@@ -1,12 +1,10 @@
-"""Round-11 operators (multimodal dedup tier): parity-proven during round
-10, catalog-registered at the round-10→11 boundary (plans/round11_staged.py
-docstring). These tests prove the specs with the same exact DuckDB
-compare the live sweep uses, pin the promotion contract (catalog 270 →
-283, unchecked promotions in the sampled prefix), and brute-force /
-property-check
-each operator — the dHash closed form, the brightness/perturbation
-invariants, banding exhaustiveness, frame-set Jaccard, landmark
-constellations, the df cutoffs, and the decode-honesty contract.
+"""Round-11 catalog operators (multimodal dedup tier,
+plans/round11_staged.py). These tests prove the specs with the same
+exact DuckDB compare the catalog-wide sweep uses, and brute-force /
+property-check each operator — the dHash closed form, the
+brightness/perturbation invariants, banding exhaustiveness, frame-set
+Jaccard, landmark constellations, the df cutoffs, and the
+decode-honesty contract.
 """
 
 from __future__ import annotations
@@ -16,59 +14,28 @@ import itertools
 import pytest
 from pyspark.sql import functions as F
 
+from dbt_glue_spark.plans import round11_staged
+from dbt_glue_spark.plans.catalog import SPECS
 from dbt_glue_spark.plans.round11_staged import (
-    STAGED11,
     expected_dhash,
     synth_audio_bytes,
     synth_dhash_png,
     synth_image_bytes,
     synth_video_bytes,
 )
-from tools.check_parity import duck_con, normalize, values_equal
+from tools.check_parity import exact_compare
 
-STAGED11_NAMES = sorted(STAGED11())
-
-
-def _exact_compare(spark, sf_dir, spec):
-    sdf = spec.fn(spark, sf_dir)
-    scols = sdf.columns
-    srows = [tuple(r) for r in sdf.collect()]
-    con = duck_con(sf_dir)
-    try:
-        res = con.execute(spec.oracle)
-        dcols = [d[0] for d in res.description]
-        drows = res.fetchall()
-    finally:
-        con.close()
-    assert sorted(scols) == sorted(dcols), (scols, dcols)
-    sn, dn = normalize(srows, scols), normalize(drows, dcols)
-    assert len(sn) == len(dn), (len(sn), len(dn))
-    for r1, r2 in zip(sn, dn):
-        assert all(values_equal(a, b) for a, b in zip(r1, r2)), (r1, r2)
+ROUND11_SPECS = {
+    name: spec
+    for name, spec in SPECS().items()
+    if spec.fn.__module__ == round11_staged.__name__
+}
+ROUND11_NAMES = sorted(ROUND11_SPECS)
 
 
-@pytest.mark.parametrize("name", STAGED11_NAMES)
+@pytest.mark.parametrize("name", ROUND11_NAMES)
 def test_staged11_oracle_parity(spark, sf_dir, name):
-    _exact_compare(spark, sf_dir, STAGED11()[name])
-
-
-def test_staged11_promoted_and_sampled_first():
-    """Round-11 promotion contract (rotation-invariant form, per the r7
-    verdict's time-bomb lesson): the 13 staged operators are live in the
-    catalog (270 + 13 = 283), and any of them WITHOUT a green latest
-    driver CORRECTNESS row sits in the driver's 50-query sampled prefix
-    — true before the driver run (all 13 in the never-checked tier) and
-    after it (green rows rotate out, red rows must re-enter)."""
-    from dbt_glue_spark.plans.catalog import SPECS, _previously_checked
-
-    specs = SPECS()
-    assert len(specs) >= 283, len(specs)  # 283 at r11; later rounds promote more
-    missing = set(STAGED11_NAMES) - set(specs)
-    assert not missing, missing
-    prefix = set(list(specs)[:50])
-    unchecked = set(STAGED11_NAMES) - _previously_checked()
-    not_in_prefix = unchecked - prefix
-    assert not not_in_prefix, not_in_prefix
+    exact_compare(spark, sf_dir, SPECS()[name])
 
 
 # ---------------------------------------------------------------------------
@@ -402,7 +369,7 @@ def test_near_dup_plans_have_no_cartesian(spark, sf_dir):
         "ext_video_near_dup",
         "ext_audio_fingerprint_pairs",
     ):
-        df = STAGED11()[name].fn(spark, sf_dir)
+        df = SPECS()[name].fn(spark, sf_dir)
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "CartesianProduct" not in plan, (name, plan)
         assert "BroadcastNestedLoopJoin" not in plan, (name, plan)
@@ -415,8 +382,8 @@ def test_media_bytes_never_shuffle(spark, sf_dir):
     as INPUT to the MapInPandas decode, which runs before any shuffle)."""
     import re
 
-    for name in STAGED11_NAMES:
-        df = STAGED11()[name].fn(spark, sf_dir)
+    for name in ROUND11_NAMES:
+        df = SPECS()[name].fn(spark, sf_dir)
         plan = df._jdf.queryExecution().executedPlan().toString()
         for part in re.findall(r"hashpartitioning\(([^)]*)\)", plan):
             assert "content#" not in part, (name, part)
@@ -647,7 +614,7 @@ def test_staged11_specs_survive_empty_documents(spark, sf_dir, tmp_path):
         load_table(spark, sf_dir, t).limit(0).coalesce(1).write.mode(
             "overwrite"
         ).parquet(os.path.join(out, f"{t}.parquet"))
-    for name, spec in sorted(STAGED11().items()):
+    for name, spec in sorted(ROUND11_SPECS.items()):
         n = spec.fn(spark, out).count()
         assert n == 0, (name, n)
 

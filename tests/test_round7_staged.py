@@ -1,7 +1,7 @@
-"""Round-7 staged operators — promoted to the live catalog at the r6→7
-boundary (see plans/round7_staged.py docstring). These tests keep the
-direct exact-DuckDB parity proofs for the 16 specs and pin the promotion
-contract: all 16 live, and sampled first by the driver rotation.
+"""Round-7 catalog operators (plans/round7_staged.py): brute-force,
+property and layout-invariance checks for the 16 specs. Their exact
+DuckDB-oracle compare runs in the catalog-wide parity sweep
+(tests/test_parity_sweep.py).
 """
 
 from __future__ import annotations
@@ -11,57 +11,18 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from dbt_glue_spark.plans.round7_staged import STAGED
-from tools.check_parity import duck_con, normalize, values_equal
+from dbt_glue_spark.plans import round7_staged
+from dbt_glue_spark.plans.catalog import SPECS
 
-# Promotion-gate / full-sweep module: deselected by default so the suite
+# Heavy module: deselected by default so the suite
 # fits the driver's pytest window (r12 verdict item 3); `pytest -m slow` runs it.
 pytestmark = pytest.mark.slow
 
-STAGED_NAMES = sorted(STAGED())
-
-
-def _exact_compare(spark, sf_dir, spec):
-    sdf = spec.fn(spark, sf_dir)
-    scols = sdf.columns
-    srows = [tuple(r) for r in sdf.collect()]
-    con = duck_con(sf_dir)
-    try:
-        res = con.execute(spec.oracle)
-        dcols = [d[0] for d in res.description]
-        drows = res.fetchall()
-    finally:
-        con.close()
-    assert sorted(scols) == sorted(dcols), (scols, dcols)
-    sn, dn = normalize(srows, scols), normalize(drows, dcols)
-    assert len(sn) == len(dn), (len(sn), len(dn))
-    for r1, r2 in zip(sn, dn):
-        assert all(values_equal(a, b) for a, b in zip(r1, r2)), (r1, r2)
-
-
-@pytest.mark.parametrize("name", STAGED_NAMES)
-def test_staged_oracle_parity(spark, sf_dir, name):
-    _exact_compare(spark, sf_dir, STAGED()[name])
-
-
-def test_staged_operators_promoted_and_sampled_first():
-    """Round-7 promotion contract, in rotation-invariant form: all 16
-    staged operators are live in the catalog, and any of them WITHOUT a
-    green latest driver CORRECTNESS row sits in the never-checked tier,
-    i.e. inside the driver's 50-query sampled prefix. (The r7 original
-    hard-coded prefix membership, which was only true *before* the driver
-    wrote CORRECTNESS_r07.json — once the 16 earned green rows, the
-    rotation correctly deprioritized them and the assertion rotted. This
-    form stays true before AND after a driver run.)"""
-    from dbt_glue_spark.plans.catalog import SPECS, _previously_checked
-
-    specs = SPECS()
-    missing = set(STAGED_NAMES) - set(specs)
-    assert not missing, missing
-    prefix = set(list(specs)[:50])
-    unchecked = set(STAGED_NAMES) - _previously_checked()
-    not_in_prefix = unchecked - prefix
-    assert not not_in_prefix, not_in_prefix
+ROUND7_SPECS = {
+    name: spec
+    for name, spec in SPECS().items()
+    if spec.fn.__module__ == round7_staged.__name__
+}
 
 
 def test_weighted_sample_layout_invariant(spark, sf_dir):
@@ -438,7 +399,7 @@ def test_staged_survive_empty_input(spark, sf_dir, tmp_path_factory):
         load_table(spark, sf_dir, t).limit(0).coalesce(1).write.mode(
             "overwrite"
         ).parquet(os.path.join(out, f"{t}.parquet"))
-    for name, spec in sorted(STAGED().items()):
+    for name, spec in sorted(ROUND7_SPECS.items()):
         df = spec.fn(spark, out)
         rows = df.collect()
         assert isinstance(rows, list), name
@@ -712,14 +673,14 @@ def test_mad_outliers_hand_computed(spark):
 
 
 def test_staged_driver_contract(spark, sf_dir):
-    """Staged results must already satisfy the driver's canonicalization
+    """Round-7 results must satisfy the driver's canonicalization
     precondition (flat orderable scalar columns + pandas sort round-trip)
-    so promotion cannot re-create the round-4 array_agg incident."""
+    so the round-4 array_agg incident cannot recur."""
     from pyspark.sql import types as T
 
     from tests.test_driver_contract import NESTED, _driver_canon
 
-    for name, spec in sorted(STAGED().items()):
+    for name, spec in sorted(ROUND7_SPECS.items()):
         df = spec.fn(spark, sf_dir)
         nested = [
             f.name for f in df.schema.fields if isinstance(f.dataType, NESTED)

@@ -1,9 +1,7 @@
-"""Round-8 staged operators: parity-proven now, catalog-registered at the
-round-7→8 boundary (plans/round8_staged.py docstring). These tests prove
-the staged specs with the same exact DuckDB compare the live sweep uses,
-and pin the stage-then-promote discipline: the live catalog stays at 230
-this round so the driver's sampled prefix covers exactly the 16 round-7
-promotions.
+"""Round-8 catalog operators (plans/round8_staged.py): brute-force and
+property checks, plus the forced-spill exact compare. Their default
+exact DuckDB-oracle compare runs in the catalog-wide parity sweep
+(tests/test_parity_sweep.py).
 """
 
 from __future__ import annotations
@@ -11,56 +9,19 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from dbt_glue_spark.plans.round8_staged import STAGED8
-from tools.check_parity import duck_con, normalize, values_equal
+from dbt_glue_spark.plans import round8_staged
+from dbt_glue_spark.plans.catalog import SPECS
+from tools.check_parity import exact_compare
 
-# Promotion-gate / full-sweep module: deselected by default so the suite
+# Heavy module: deselected by default so the suite
 # fits the driver's pytest window (r12 verdict item 3); `pytest -m slow` runs it.
 pytestmark = pytest.mark.slow
 
-STAGED8_NAMES = sorted(STAGED8())
-
-
-def _exact_compare(spark, sf_dir, spec):
-    sdf = spec.fn(spark, sf_dir)
-    scols = sdf.columns
-    srows = [tuple(r) for r in sdf.collect()]
-    con = duck_con(sf_dir)
-    try:
-        res = con.execute(spec.oracle)
-        dcols = [d[0] for d in res.description]
-        drows = res.fetchall()
-    finally:
-        con.close()
-    assert sorted(scols) == sorted(dcols), (scols, dcols)
-    sn, dn = normalize(srows, scols), normalize(drows, dcols)
-    assert len(sn) == len(dn), (len(sn), len(dn))
-    for r1, r2 in zip(sn, dn):
-        assert all(values_equal(a, b) for a, b in zip(r1, r2)), (r1, r2)
-
-
-@pytest.mark.parametrize("name", STAGED8_NAMES)
-def test_staged8_oracle_parity(spark, sf_dir, name):
-    _exact_compare(spark, sf_dir, STAGED8()[name])
-
-
-def test_staged8_promoted_and_sampled_first():
-    """Round-8 promotion contract (rotation-invariant form, per the r7
-    verdict's time-bomb lesson): the 6 staged operators are live in the
-    catalog (230 + 6 = 236), and any of them WITHOUT a green latest
-    driver CORRECTNESS row sits in the driver's 50-query sampled prefix
-    — true before the driver run (all 6 in the never-checked tier) and
-    after it (green rows rotate out, red rows must re-enter)."""
-    from dbt_glue_spark.plans.catalog import SPECS, _previously_checked
-
-    specs = SPECS()
-    assert len(specs) >= 236, len(specs)  # 236 at r8; later rounds promote more
-    missing = set(STAGED8_NAMES) - set(specs)
-    assert not missing, missing
-    prefix = set(list(specs)[:50])
-    unchecked = set(STAGED8_NAMES) - _previously_checked()
-    not_in_prefix = unchecked - prefix
-    assert not not_in_prefix, not_in_prefix
+ROUND8_SPECS = {
+    name: spec
+    for name, spec in SPECS().items()
+    if spec.fn.__module__ == round8_staged.__name__
+}
 
 
 def test_exact_substring_spans_brute_force(spark):
@@ -227,8 +188,8 @@ def test_staged8_parity_under_forced_spill(spark, sf_dir):
     try:
         for k, v in SPILL_CONFS.items():
             spark.conf.set(k, v)
-        for name in STAGED8_NAMES:
-            _exact_compare(spark, sf_dir, STAGED8()[name])
+        for spec in ROUND8_SPECS.values():
+            exact_compare(spark, sf_dir, spec)
     finally:
         for k, v in old.items():
             if v is not None:
@@ -434,6 +395,6 @@ def test_staged8_survive_empty_input(spark, sf_dir, tmp_path_factory):
         load_table(spark, sf_dir, t).limit(0).coalesce(1).write.mode(
             "overwrite"
         ).parquet(os.path.join(out, f"{t}.parquet"))
-    for name, spec in sorted(STAGED8().items()):
+    for name, spec in sorted(ROUND8_SPECS.items()):
         rows = spec.fn(spark, out)
         assert isinstance(rows.collect(), list), name

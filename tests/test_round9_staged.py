@@ -1,8 +1,7 @@
-"""Round-9 pool: staged and parity-proven during round 8, PROMOTED at the
-round-8→9 boundary (catalog 236 → 246; plans/round9_staged.py docstring).
-These tests prove the specs with the same exact DuckDB compare the live
-sweep uses, pin the promotion contract rotation-invariantly, and
-brute-force / property-check each operator.
+"""Round-9 catalog operators (plans/round9_staged.py): brute-force /
+property checks for each operator, plus the forced-spill exact compare.
+Their default exact DuckDB-oracle compare runs in the catalog-wide
+parity sweep (tests/test_parity_sweep.py).
 """
 
 from __future__ import annotations
@@ -12,56 +11,19 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
-from dbt_glue_spark.plans.round9_staged import STAGED9
-from tools.check_parity import duck_con, normalize, values_equal
+from dbt_glue_spark.plans import round9_staged
+from dbt_glue_spark.plans.catalog import SPECS
+from tools.check_parity import exact_compare
 
-# Promotion-gate / full-sweep module: deselected by default so the suite
+# Heavy module: deselected by default so the suite
 # fits the driver's pytest window (r12 verdict item 3); `pytest -m slow` runs it.
 pytestmark = pytest.mark.slow
 
-STAGED9_NAMES = sorted(STAGED9())
-
-
-def _exact_compare(spark, sf_dir, spec):
-    sdf = spec.fn(spark, sf_dir)
-    scols = sdf.columns
-    srows = [tuple(r) for r in sdf.collect()]
-    con = duck_con(sf_dir)
-    try:
-        res = con.execute(spec.oracle)
-        dcols = [d[0] for d in res.description]
-        drows = res.fetchall()
-    finally:
-        con.close()
-    assert sorted(scols) == sorted(dcols), (scols, dcols)
-    sn, dn = normalize(srows, scols), normalize(drows, dcols)
-    assert len(sn) == len(dn), (len(sn), len(dn))
-    for r1, r2 in zip(sn, dn):
-        assert all(values_equal(a, b) for a, b in zip(r1, r2)), (r1, r2)
-
-
-@pytest.mark.parametrize("name", STAGED9_NAMES)
-def test_staged9_oracle_parity(spark, sf_dir, name):
-    _exact_compare(spark, sf_dir, STAGED9()[name])
-
-
-def test_staged9_promoted_and_sampled_first():
-    """Round-9 promotion contract (rotation-invariant form, per the r7
-    verdict's time-bomb lesson): the 10 staged operators are live in the
-    catalog (236 + 10 = 246), and any of them WITHOUT a green latest
-    driver CORRECTNESS row sits in the driver's 50-query sampled prefix
-    — true before the driver run (all 10 in the never-checked tier) and
-    after it (green rows rotate out, red rows must re-enter)."""
-    from dbt_glue_spark.plans.catalog import SPECS, _previously_checked
-
-    specs = SPECS()
-    assert len(specs) >= 246, len(specs)  # 246 at r9; later rounds promote more
-    missing = set(STAGED9_NAMES) - set(specs)
-    assert not missing, missing
-    prefix = set(list(specs)[:50])
-    unchecked = set(STAGED9_NAMES) - _previously_checked()
-    not_in_prefix = unchecked - prefix
-    assert not not_in_prefix, not_in_prefix
+ROUND9_SPECS = {
+    name: spec
+    for name, spec in SPECS().items()
+    if spec.fn.__module__ == round9_staged.__name__
+}
 
 
 # ---------------------------------------------------------------------------
@@ -395,7 +357,7 @@ def test_staged9_survive_empty_input(spark, sf_dir, tmp_path_factory):
         load_table(spark, sf_dir, t).limit(0).coalesce(1).write.mode(
             "overwrite"
         ).parquet(os.path.join(out, f"{t}.parquet"))
-    for name, spec in sorted(STAGED9().items()):
+    for name, spec in sorted(ROUND9_SPECS.items()):
         rows = spec.fn(spark, out).collect()
         assert isinstance(rows, list), name
 
@@ -405,7 +367,7 @@ def test_staged9_driver_contract(spark, sf_dir):
     driver's canonicalization precondition."""
     from tests.test_driver_contract import NESTED, _driver_canon
 
-    for name, spec in sorted(STAGED9().items()):
+    for name, spec in sorted(ROUND9_SPECS.items()):
         df = spec.fn(spark, sf_dir)
         nested = [
             f.name for f in df.schema.fields if isinstance(f.dataType, NESTED)
@@ -467,8 +429,8 @@ def test_staged9_parity_under_forced_spill(spark, sf_dir):
     try:
         for k, v in SPILL_CONFS.items():
             spark.conf.set(k, v)
-        for name in STAGED9_NAMES:
-            _exact_compare(spark, sf_dir, STAGED9()[name])
+        for spec in ROUND9_SPECS.values():
+            exact_compare(spark, sf_dir, spec)
     finally:
         for k, v in old.items():
             if v is not None:
@@ -664,8 +626,7 @@ def test_minhash_cap_star_vs_drop_policies(spark):
 def test_minhash_capped_plan_is_bucketed(spark, sf_dir):
     """The capped variant must keep the bucketed band join — never a
     cartesian/broadcast-nested-loop pair generation (the gate
-    test_plan_quality pins for the live pair generators, applied to the
-    staged entry ahead of its promotion)."""
+    test_plan_quality pins for the other pair generators)."""
     from dbt_glue_spark.sources.registry import load_table
     from dbt_glue_spark.extensions.dedup import minhash_lsh_pairs
 

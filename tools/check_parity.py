@@ -11,20 +11,19 @@ Usage: python tools/check_parity.py [sf_dir] [query ...]
 from __future__ import annotations
 
 import math
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 
-from dbt_glue_spark.plans.catalog import SPECS
+from dbt_glue_spark.plans.catalog import SPECS, QuerySpec
 from dbt_glue_spark.session import get_spark
 from dbt_glue_spark.sources.registry import TABLES
 
 
 def duck_con(sf_dir: str) -> duckdb.DuckDBPyConnection:
-    import os
-
     con = duckdb.connect()
     for t in TABLES:
         path = f"{sf_dir}/{t}.parquet"
@@ -61,6 +60,37 @@ def values_equal(a, b) -> bool:
     return str(a) == str(b)
 
 
+def exact_compare(spark, sf_dir: str, spec: QuerySpec, con=None) -> int:
+    """Run ``spec`` on Spark and its DuckDB oracle over ``sf_dir`` and compare
+    exactly: columns by name, rows by value after sorting both sides.
+
+    Returns the row count; raises ``AssertionError`` naming the first
+    difference. ``con`` reuses an open :func:`duck_con` connection.
+    """
+    sdf = spec.fn(spark, sf_dir)
+    scols = sdf.columns
+    srows = [tuple(r) for r in sdf.collect()]
+    own = con is None
+    con = duck_con(sf_dir) if own else con
+    try:
+        rel = con.sql(spec.oracle)
+        dcols, drows = rel.columns, rel.fetchall()
+    finally:
+        if own:
+            con.close()
+    if sorted(scols) != sorted(dcols):
+        raise AssertionError(f"columns differ spark={sorted(scols)} duck={sorted(dcols)}")
+    sn, dn = normalize(srows, scols), normalize(drows, dcols)
+    if len(sn) != len(dn):
+        raise AssertionError(f"rowcount spark={len(sn)} duck={len(dn)}")
+    for i, (sr, dr) in enumerate(zip(sn, dn)):
+        if not all(values_equal(a, b) for a, b in zip(sr, dr)):
+            raise AssertionError(
+                f"first diff at sorted row {i}:\n      spark: {sr}\n      duck : {dr}"
+            )
+    return len(sn)
+
+
 def run_parity(sf_dir: str, only=None, spark=None) -> list[str]:
     """Run the sweep; return the list of failing query names.
 
@@ -82,45 +112,14 @@ def run_parity(sf_dir: str, only=None, spark=None) -> list[str]:
         if only and name not in only:
             continue
         try:
-            sdf = spec.fn(spark, sf_dir)
-            scols = sdf.columns
-            srows = [tuple(r) for r in sdf.collect()]
+            if spec.oracle is None:
+                n = len(spec.fn(spark, sf_dir).collect())
+                print(f"ok    {name}: rows-only ({n} rows)")
+            else:
+                print(f"PASS  {name} ({exact_compare(spark, sf_dir, spec, con)} rows)")
         except Exception as e:  # noqa: BLE001
             failures.append(name)
-            print(f"FAIL  {name}: spark error: {e}")
-            continue
-        if spec.oracle is None:
-            print(f"ok    {name}: rows-only ({len(srows)} rows)")
-            continue
-        try:
-            rel = con.sql(spec.oracle)
-            dcols = rel.columns
-            drows = rel.fetchall()
-        except Exception as e:  # noqa: BLE001
-            failures.append(name)
-            print(f"FAIL  {name}: duckdb error: {e}")
-            continue
-        if sorted(scols) != sorted(dcols):
-            failures.append(name)
-            print(f"FAIL  {name}: columns differ spark={sorted(scols)} duck={sorted(dcols)}")
-            continue
-        sn, dn = normalize(srows, scols), normalize(drows, dcols)
-        if len(sn) != len(dn):
-            failures.append(name)
-            print(f"FAIL  {name}: rowcount spark={len(sn)} duck={len(dn)}")
-            continue
-        bad = None
-        for i, (sr, dr) in enumerate(zip(sn, dn)):
-            if not all(values_equal(a, b) for a, b in zip(sr, dr)):
-                bad = (i, sr, dr)
-                break
-        if bad:
-            failures.append(name)
-            print(f"FAIL  {name}: first diff at sorted row {bad[0]}:")
-            print(f"      spark: {bad[1]}")
-            print(f"      duck : {bad[2]}")
-        else:
-            print(f"PASS  {name} ({len(sn)} rows)")
+            print(f"FAIL  {name}: {type(e).__name__}: {e}")
     print(f"\n{len(failures)} failures" + (f": {failures}" if failures else ""))
     return failures
 
