@@ -217,28 +217,77 @@ class Engine:
         return self.spark.table(self.relation_for(name).render())
 
     def _deps(self, model: Model) -> list[str]:
-        if not model.sql:
-            return []
-        return [
-            name
-            for kind, name in _REF.findall(model.sql)
-            if kind == "ref" and name in self.models
-        ]
+        """The models this one ``{{ ref() }}``s in its SQL or its hooks
+        (itself excepted)."""
+        out: list[str] = []
+        for text in [model.sql or "", *model.pre_hook, *model.post_hook]:
+            for kind, name in _REF.findall(text):
+                if kind == "ref" and name in self.models and name not in (model.name, *out):
+                    out.append(name)
+        return out
+
+    def _schedule(
+        self, tasks: list, deps: dict[Any, set], threads: int, work: Callable
+    ) -> None:
+        """Run ``work(t)`` for every task as soon as all of ``deps[t]`` have
+        finished, at most ``threads`` at once; ready tasks start in ``tasks``
+        order. After a failure no new task starts; running ones finish,
+        then the first error is re-raised."""
+        from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
+
+        from pyspark.util import inheritable_thread_target
+
+        threads = max(1, threads)
+        pending = list(tasks)
+        running: dict = {}  # future -> task
+        done: set = set()
+        error: BaseException | None = None
+        with ThreadPoolExecutor(max_workers=threads) as pool:
+            while True:
+                if error is None:
+                    for t in [t for t in pending if deps[t] <= done]:
+                        if len(running) == threads:
+                            break
+                        pending.remove(t)
+                        # each task carries the caller's Spark local
+                        # properties (job group, scheduler pool) into the pool
+                        target = inheritable_thread_target(self.spark)(work)
+                        running[pool.submit(target, t)] = t
+                if not running:
+                    break
+                finished, _ = wait(running, return_when=FIRST_COMPLETED)
+                for f in sorted(finished, key=lambda f: tasks.index(running[f])):
+                    t = running.pop(f)
+                    if f.exception() is None:
+                        done.add(t)
+                    elif error is None:
+                        error = f.exception()
+        if error is not None:
+            raise error
 
     def run(
         self,
         names: list[str] | None = None,
-        threads: int = 1,
+        threads: int = 4,
         select: str | None = None,
     ) -> None:
         """Topological DAG execution (dbt-core's orchestration role).
 
-        ``threads > 1`` materializes independent models concurrently,
-        level-by-level — the reference inherits exactly this from dbt-core's
-        ``threads`` profile setting. Spark job submission is thread-safe;
-        concurrent model builds keep a large cluster busy while one model's
-        shuffle is in flight. Dependents still wait for their full
-        dependency level (a level barrier, like dbt's scheduler).
+        Dependency-driven scheduling, like dbt-core's ``threads`` profile
+        setting that the reference inherits: a model starts as soon as all
+        of its dependencies have finished, at most ``threads`` models run at
+        once (default 4), and ready models start in topological order, so
+        ``threads=1`` builds the models one by one in that order. Concurrent
+        models submit their Spark jobs to one shared session; a model's
+        small jobs overlap another's instead of queuing behind it.
+
+        Dependencies are the ``{{ ref() }}``s in a model's SQL and in its
+        ``pre_hook``/``post_hook``. A python model (``fn`` /
+        ``python_source``) calls ``dbt.ref()`` only at run time, so it waits
+        for every model ahead of it in the order.
+
+        After a model fails no new model starts; models already running
+        finish, then the first error is re-raised.
 
         ``select`` is the ``dbt run --select`` axis: ``"tag:x"`` picks every
         model tagged ``x`` (their upstream dependencies build implicitly,
@@ -300,22 +349,12 @@ class Engine:
 
         for n in names or list(self.models):
             visit(n)
-        if threads <= 1:
-            for n in order:
-                self.run_model(self.models[n])
-            return
-        # level = longest dependency path; nodes in a level are independent
-        level: dict[str, int] = {}
-        for n in order:  # topological ⇒ deps already labeled
-            deps = self._deps(self.models[n])
-            level[n] = 1 + max((level[d] for d in deps), default=-1)
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=threads) as pool:
-            for lvl in sorted(set(level.values())):
-                batch = [n for n in order if level[n] == lvl]
-                # list() propagates the first worker exception
-                list(pool.map(lambda n: self.run_model(self.models[n]), batch))
+        deps: dict[str, set[str]] = {}
+        for i, n in enumerate(order):
+            m = self.models[n]
+            python = m.fn is not None or m.python_source is not None
+            deps[n] = set(order[:i]) if python else set(self._deps(m))
+        self._schedule(order, deps, threads, lambda n: self.run_model(self.models[n]))
 
     # -- materializations -------------------------------------------------
     def run_model(self, model: Model) -> Relation:
@@ -489,11 +528,6 @@ class Engine:
         self.catalog.drop(rel)
         self.catalog.rename(stage, rel)
         self.catalog.refresh(rel)
-        # committed generation's location — lets callers (compact) account
-        # for the files they just wrote without building a second Spark
-        # FileIndex over the new table (one listing per rewrite, not two;
-        # at 100 TB object-store listing is a real cost)
-        self._last_swap_location = loc
         try:
             rows = int(obs.get["rows"] or 0)
         except Exception:  # noqa: BLE001 — metric loss must not fail the commit
@@ -601,7 +635,10 @@ class Engine:
         return ran
 
     def test(
-        self, names: list[str] | None = None, store_failures: bool = False
+        self,
+        names: list[str] | None = None,
+        store_failures: bool = False,
+        threads: int = 4,
     ) -> DataFrame:
         """Run every declared schema test (``Model.tests``) — the ``dbt
         test`` command. Returns a report DataFrame (model, column, test,
@@ -620,10 +657,15 @@ class Engine:
         against persisted evidence instead of re-deriving it. Passing
         tests store nothing, and a re-run replaces prior audit tables
         through the same versioned write path as any other table.
+
+        ``threads`` bounds how many failure counts run at once (dbt's
+        ``threads`` governs ``dbt test`` too), with the scheduling and
+        failure semantics of :meth:`run`. Report rows keep declaration
+        order; ``store_failures`` writes follow the counts, in that order.
         """
         from dbt_glue_spark.quality import tests as dq
 
-        report: list[tuple] = []
+        checks: list[tuple[str, str, str, DataFrame]] = []
         for name in names or list(self.models):
             model = self.models[name]
             if not model.tests:
@@ -650,17 +692,26 @@ class Engine:
                         label = "relationships"
                     else:
                         raise ValueError(f"unknown test spec {spec!r} on {name}.{column}")
-                    n = fails.count()
-                    if store_failures and n > 0:
-                        audit = Engine(
-                            self.spark,
-                            self.warehouse,
-                            schema=f"{self.schema}_dbt_test__audit",
-                        )
-                        audit_model = Model(f"{name}__{column}__{label}")
-                        audit.add(audit_model)
-                        audit._write_swap(fails, audit_model, op="STORE FAILURES")
-                    report.append((name, column, label, n, n == 0))
+                    checks.append((name, column, label, fails))
+        counts = [0] * len(checks)
+
+        def count(i: int) -> None:
+            counts[i] = checks[i][3].count()
+
+        tasks = list(range(len(checks)))
+        self._schedule(tasks, {i: set() for i in tasks}, threads, count)
+        report: list[tuple] = []
+        for n, (name, column, label, fails) in zip(counts, checks):
+            if store_failures and n > 0:
+                audit = Engine(
+                    self.spark,
+                    self.warehouse,
+                    schema=f"{self.schema}_dbt_test__audit",
+                )
+                audit_model = Model(f"{name}__{column}__{label}")
+                audit.add(audit_model)
+                audit._write_swap(fails, audit_model, op="STORE FAILURES")
+            report.append((name, column, label, n, n == 0))
         return self.spark.createDataFrame(
             report or [("", "", "", 0, True)][:0],
             "model string, column string, test string, n_failures bigint, passed boolean",
@@ -786,13 +837,13 @@ class Engine:
             rewritten = df.repartition(n_target)
         self._write_swap(rewritten, model, op="OPTIMIZE")
         # after-stats from ONE driver-side walk of the generation we just
-        # committed — not a second Spark FileIndex over the new table (on
-        # an object store that second listing is not free; with a
-        # transactional format this becomes a manifest read instead)
+        # committed, found through the catalog (one DESCRIBE, no listing) —
+        # not a second Spark FileIndex over the new table (on an object
+        # store that second listing is not free; with a transactional
+        # format this becomes a manifest read instead)
+        loc = self.catalog.location(rel)
         n_after, bytes_after = 0, 0
-        for root, _dirs, files in os.walk(
-            urlparse(self._last_swap_location).path or self._last_swap_location
-        ):
+        for root, _dirs, files in os.walk(urlparse(loc).path or loc):
             # prune hidden/metadata dirs (_symlink_format_manifest etc.) —
             # their files are not data and must not inflate after-stats
             _dirs[:] = [d for d in _dirs if not d.startswith((".", "_"))]
@@ -1304,8 +1355,8 @@ class Engine:
             exclude_columns=cfg.merge_exclude_columns,
             incremental_predicates=cfg.incremental_predicates,
         )
-        # a rewriting merge must not read-then-truncate its own input
-        merged = merged.localCheckpoint(eager=True)
+        # the lazy self-read is safe: _write_swap lands the merge in a new
+        # generation and drops the one this plan reads only after commit
         return self._write_swap(merged, model, op="MERGE")
 
     def _mat_snapshot(self, model: Model) -> Relation:
@@ -1324,7 +1375,5 @@ class Engine:
             check_cols=cfg.check_cols,
             invalidate_hard_deletes=cfg.invalidate_hard_deletes,
         )
-        if current is not None:
-            snap = snap.localCheckpoint(eager=True)
         return self._write_swap(snap, model, op="SNAPSHOT")
 

@@ -10,7 +10,8 @@ dbt-core.
 
 Our plan computes the next snapshot state functionally:
 ``closed ∪ unchanged-open ∪ closed-out-changed ∪ new-versions ∪ inserts``
-— one full-outer shuffle on the unique key per run, then a narrow union.
+— one full-outer join on the unique key per run, whose rows each emit
+their open and/or source row in a single projection, then a narrow union.
 The incremental materializer persists it (native MERGE INTO when a
 transactional format is available; table rewrite on plain parquet).
 
@@ -129,25 +130,18 @@ def scd2_apply(
             new_vfrom.alias("dbt_updated_at"),
         ]
 
-    changed = in_open & in_src & changed_pred
-    # unchanged open rows (or deletions kept open per default)
-    keep_open_pred = in_open & (
-        (in_src & ~changed_pred)
-        | (~in_src & F.lit(not invalidate_hard_deletes))
+    # one pass over the join: every open row comes out once (kept open,
+    # closed at new_vfrom when changed, closed at as_of when deleted and
+    # invalidate_hard_deletes), every source row once when it is a new
+    # version or an insert
+    open_valid_to = F.when(in_src & changed_pred, new_vfrom)
+    if invalidate_hard_deletes:
+        open_valid_to = open_valid_to.when(~in_src, _ts(as_of))
+    open_row = F.when(in_open, F.struct(*open_row_out(open_valid_to)))
+    src_row = F.when(in_src & (~in_open | changed_pred), F.struct(*src_row_out()))
+    rows = (
+        j.select(F.explode(F.array(open_row, src_row)).alias("__r"))
+        .filter(F.col("__r").isNotNull())
+        .select("__r.*")
     )
-    keep_open = j.filter(keep_open_pred).select(
-        *open_row_out(F.lit(None).cast("timestamp"))
-    )
-    close_changed = j.filter(changed).select(*open_row_out(new_vfrom))
-    close_deleted = (
-        j.filter(in_open & ~in_src).select(*open_row_out(_ts(as_of)))
-        if invalidate_hard_deletes
-        else None
-    )
-    new_versions = j.filter(changed).select(*src_row_out())
-    inserts = j.filter(in_src & ~in_open).select(*src_row_out())
-
-    out = closed.unionByName(keep_open).unionByName(close_changed)
-    if close_deleted is not None:
-        out = out.unionByName(close_deleted)
-    return out.unionByName(new_versions).unionByName(inserts)
+    return closed.unionByName(rows)

@@ -531,3 +531,191 @@ def test_pre_and_post_hooks_run_with_resolution(spark, warehouse):
         assert props.get("hooked") == "yes"
     finally:
         eng.catalog.drop_schema(schema)
+
+
+def _record_builds(engine, before=None, after=None):
+    """Wrap ``engine.run_model`` to log build order and run per-model
+    callbacks (``before[name]()`` / ``after[name]()``) on the worker."""
+    built: list[str] = []
+    orig = engine.run_model
+
+    def run_model(model):
+        if before and model.name in before:
+            before[model.name]()
+        rel = orig(model)
+        built.append(model.name)
+        if after and model.name in after:
+            after[model.name]()
+        return rel
+
+    engine.run_model = run_model
+    return built
+
+
+def test_scheduler_is_dependency_driven_not_level_barrier(engine):
+    """A slow root blocks until the CHILD of a fast root has been built; a
+    level barrier would hold the child until the slow root finished and
+    the bounded wait would time out."""
+    import threading
+
+    child_done = threading.Event()
+    waited: list[bool] = []
+    engine.add(Model("slow_root", seed_csv=BASE_CSV, config=ModelConfig(materialized="seed")))
+    engine.add(Model("fast_root", seed_csv=BASE_CSV, config=ModelConfig(materialized="seed")))
+    engine.add(
+        Model(
+            "fast_child",
+            sql="select id from {{ ref('fast_root') }}",
+            config=ModelConfig(materialized="table"),
+        )
+    )
+    built = _record_builds(
+        engine,
+        before={"slow_root": lambda: waited.append(child_done.wait(60))},
+        after={"fast_child": child_done.set},
+    )
+    engine.run(threads=2)
+    assert waited == [True]
+    assert built.index("fast_child") < built.index("slow_root")
+    assert engine.ref_df("fast_child").count() == 10
+
+
+def test_scheduler_single_thread_builds_in_topological_order(engine):
+    # declared children-first: the DFS order puts each parent before its child
+    engine.add(
+        Model("top", sql="select * from {{ ref('mid') }} join {{ ref('side') }} using (id)")
+    )
+    engine.add(Model("mid", sql="select id from {{ ref('base') }}"))
+    engine.add(Model("base", seed_csv=BASE_CSV, config=ModelConfig(materialized="seed")))
+    engine.add(Model("side", sql="select id, email from {{ ref('base') }}"))
+    built = _record_builds(engine)
+    engine.run(threads=1)
+    assert built == ["base", "mid", "side", "top"]
+
+
+def test_scheduler_failure_stops_dependents_and_reraises(engine):
+    """After ``bad`` fails, the already-running ``slow_ok`` finishes, the
+    dependent of ``bad`` never starts, and no new model starts either."""
+    import threading
+
+    from pyspark.errors import AnalysisException
+
+    failed = threading.Event()
+    engine.add(Model("base", seed_csv=BASE_CSV, config=ModelConfig(materialized="seed")))
+    engine.add(Model("bad", sql="select no_such_column from {{ ref('base') }}"))
+    engine.add(Model("bad_child", sql="select * from {{ ref('bad') }}"))
+    engine.add(Model("slow_ok", seed_csv=BASE_CSV, config=ModelConfig(materialized="seed")))
+    engine.add(Model("after_ok", sql="select * from {{ ref('slow_ok') }}"))
+    orig = engine.run_model
+
+    def run_model(model):
+        if model.name == "slow_ok":
+            assert failed.wait(60)
+        try:
+            return orig(model)
+        except AnalysisException:
+            failed.set()
+            raise
+
+    engine.run_model = run_model
+    with pytest.raises(AnalysisException):
+        engine.run(threads=4)
+    assert engine.ref_df("slow_ok").count() == 10
+    for name in ("bad", "bad_child", "after_ok"):
+        assert not engine.catalog.exists(engine.relation_for(name))
+
+
+def test_engine_test_report_independent_of_threads(engine):
+    engine.add(
+        Model(
+            "base",
+            seed_csv=BASE_CSV,
+            config=ModelConfig(materialized="seed"),
+            tests={
+                "id": ["unique", "not_null"],
+                "gender": [{"accepted_values": {"values": ["Male"]}}],
+            },
+        )
+    )
+    engine.add(
+        Model(
+            "dupes",
+            sql="select id % 3 as grp, email from {{ ref('base') }}",
+            tests={
+                "grp": ["unique"],
+                "email": [{"relationships": {"to": "base", "field": "email"}}],
+            },
+        )
+    )
+    engine.run()
+    parallel = engine.test().collect()
+    serial = engine.test(threads=1).collect()
+    assert parallel == serial
+    assert [(r.model, r.column, r.test, r.n_failures) for r in parallel] == [
+        ("base", "id", "unique", 0),
+        ("base", "id", "not_null", 0),
+        ("base", "gender", "accepted_values", 1),
+        ("dupes", "grp", "unique", 3),
+        ("dupes", "email", "relationships", 0),
+    ]
+
+
+def test_rewrites_without_checkpoint_leave_one_generation(engine, spark):
+    """Merge and snapshot read their own previous generation lazily while
+    writing the next one; with auto_vacuum each run leaves exactly one."""
+    rows1 = [(i, f"n{i}@x.org") for i in range(1, 11)]
+    rows2 = [(i, "new@x.org" if i <= 7 else f"n{i}@x.org") for i in range(5, 16)]
+    view = f"src_{engine.schema}"
+    engine.add(
+        Model(
+            "inc",
+            sql=f"select id, email from {{{{ source('{view}') }}}}",
+            config=ModelConfig(
+                materialized="incremental", incremental_strategy="merge", unique_key=["id"]
+            ),
+        )
+    )
+    engine.add(
+        Model(
+            "snap",
+            sql=f"select id, email from {{{{ source('{view}') }}}}",
+            config=ModelConfig(
+                materialized="snapshot", unique_key=["id"], strategy="check",
+                check_cols=["email"],
+            ),
+        )
+    )
+    for day, rows in (("2024-01-01", rows1), ("2024-01-02", rows2)):
+        spark.createDataFrame(rows, "id int, email string").createOrReplaceTempView(view)
+        engine._now = lambda day=day: f"{day} 00:00:00"
+        engine.run()
+    spark.catalog.dropTempView(view)
+    merged = dict(engine.ref_df("inc").collect())
+    assert merged == {**dict(rows1), **dict(rows2)}
+    snap = engine.ref_df("snap")
+    assert snap.count() == 18  # 10 first-run + 3 new versions + 5 inserts
+    closed = snap.filter("dbt_valid_to is not null").select("id").collect()
+    assert sorted(r.id for r in closed) == [5, 6, 7]
+    for name in ("inc", "snap"):
+        assert len(engine.versions(name)) == 1, name
+
+
+def test_scheduler_stress_more_workers_than_cores(engine):
+    """Twelve sibling models on eight workers with a tiny GIL switch
+    interval: every model commits exactly once, with its own rows."""
+    import sys
+
+    engine.add(Model("base", seed_csv=BASE_CSV, config=ModelConfig(materialized="seed")))
+    for i in range(12):
+        engine.add(Model(f"m{i}", sql=f"select id, {i} as k from {{{{ ref('base') }}}}"))
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        engine.run(threads=8)
+    finally:
+        sys.setswitchinterval(interval)
+    for i in range(12):
+        rows = engine.ref_df(f"m{i}").collect()
+        assert sorted(r.id for r in rows) == list(range(1, 11))
+        assert {r.k for r in rows} == {i}
+        assert [e["op"] for e in engine.history(f"m{i}")] == ["CREATE TABLE AS"]

@@ -745,3 +745,27 @@ def test_pmi_tokenize_evaluated_once(spark, sf_dir):
         assert ln.count("regexp_extract_all") == 1, ln
         assert "AS __ws" in ln, ln
     assert "rand(" not in plan, plan
+
+
+def test_scd2_apply_is_one_join(spark):
+    # the second snapshot run emits every open and source row from ONE
+    # full-outer join; one filtered branch per outcome would plan the
+    # join once per branch
+    import re
+
+    from dbt_glue_spark.materializations.snapshot import scd2_apply
+
+    v1 = spark.createDataFrame([(i, f"e{i}") for i in range(1, 9)], "id int, email string")
+    v2 = spark.createDataFrame(
+        [(i, "new" if i <= 3 else f"e{i}") for i in range(2, 12)], "id int, email string"
+    )
+    s1 = scd2_apply(None, v1, ["id"], "2024-01-01 00:00:00")
+    s2 = scd2_apply(s1, v2, ["id"], "2024-02-01 00:00:00", invalidate_hard_deletes=True)
+    rows = s2.collect()
+    # 8 open rows (ids 1-3 closed: deleted/changed) + 2 new versions + 3 inserts
+    assert len(rows) == 13
+    assert sorted(r.id for r in rows if r.dbt_valid_to is not None) == [1, 2, 3]
+    executed = s2._jdf.queryExecution().executedPlan().toString()
+    final = executed.split("== Initial Plan ==")[0]
+    joins = re.findall(r"\b\w*(?:Join|CartesianProduct)\b", final)
+    assert len(joins) == 1, executed
