@@ -68,9 +68,9 @@ def basket_lift_pairs(
 
     100 TB shape: pair generation is basket-bounded (see basket_pairs);
     marginals are an item-cardinality frame joined WITHOUT a broadcast
-    hint (AQE decides from runtime size — the r5-verdict broadcast
-    lesson); N is the only forced broadcast (1 row). Top-k plans
-    TakeOrderedAndProject — no global sort.
+    hint (AQE decides from runtime size: a forced broadcast of a
+    corpus-proportional frame OOMs the driver at scale); N is the only
+    forced broadcast (1 row). Top-k plans TakeOrderedAndProject — no global sort.
 
     Output: item_a, item_b, c_ab, m_a, m_b, n_baskets, lift_q6 —
     ordered by (lift_q6 desc, item_a, item_b), c_ab ≥ min_support.

@@ -237,8 +237,8 @@ def value_histogram(
     mergeable (cell-wise +) summary drift comparisons run on. Collapses
     to ≤ n_buckets rows via map-side partial aggregation.
 
-    NULL contract: NULL values are EXCLUDED before bucketing (r8 ADVICE:
-    ``least()`` ignores NULLs in both engines, so a NULL value used to
+    NULL contract: NULL values are EXCLUDED before bucketing
+    (``least()`` ignores NULLs in both engines, so a NULL value used to
     land silently in the TOP bucket — a NULL-rate change then
     masqueraded as tail drift in every consumer). NULL-rate monitoring
     is `profile.profile_columns`' job (ext_column_profile); the
@@ -813,7 +813,7 @@ def psi_js_drift_by_group(
     distribution to compare on the other: NULL psi/js (the empty-side
     contract), with its n_a/n_b showing which side is missing.
 
-    NULL contract (r8 ADVICE): rows with a NULL group are EXCLUDED —
+    NULL contract: rows with a NULL group are EXCLUDED —
     NULL never matches itself in the (g, bucket) full-outer join or the
     totals joins, so a NULL group present in BOTH snapshots used to
     yield two contradictory one-sided rows. NULL values are likewise
@@ -921,7 +921,7 @@ def nonfinite_audit(df: DataFrame, cols: list[str]) -> DataFrame:
     and denormals — the ingestion-side report that decides whether a
     telemetry feed is safe to aggregate.
 
-    WHY this exists (round-9 IEEE-axis adjudication, SCALE.md): this
+    WHY this exists (SCALE.md "Aggregations"): this
     engine's float-determinism contract accumulates every double
     aggregate in DECIMAL, whose domain is FINITE numbers — a NaN or Inf
     reaching any sum aborts the job under ANSI (fail-loud in both

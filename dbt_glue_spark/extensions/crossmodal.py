@@ -83,7 +83,7 @@ def pair_signatures(
                 # a NULL id arrives as NaN (Arrow hands a nullable int
                 # column to pandas as float64) and int(NaN) raises —
                 # follow the module's visible-exclusion NULL contract
-                # instead of crashing the stage (r11 ADVICE)
+                # instead of crashing the stage
                 if pid is None or pd.isna(pid):
                     continue
                 if cap is None or content is None:
@@ -244,7 +244,7 @@ def paired_keep_best(
     # cost of every image pipeline — and it is referenced by the LSH
     # pair generation (3 internal refs), the component vertex set, and
     # the final scored join; without the cache one action re-runs the
-    # full-corpus decode ~5-6× (r11 ADVICE)
+    # full-corpus decode ~5-6×
     from dbt_glue_spark.extensions.dedup import _persist
 
     sigs = _persist(pair_signatures(df, caption_col, content_col, id_col))

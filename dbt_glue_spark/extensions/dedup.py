@@ -283,9 +283,9 @@ def minhash_lsh_pairs(
     this is the 100 TB path (vs ngram_jaccard_pairs' exact index join).
 
     ``max_band_bucket`` is the mega-bucket defense the textskew probe
-    exists for (SCALE.md round-8: a 90 %-shared boilerplate prefix put
-    whole-corpus fractions into single band buckets — 10.1× runtime at
-    2.9× tokens, i.e. the bucket self-join went quadratic): a band
+    exists for (SCALE.md "Dedup at 100 TB": a 90 %-shared boilerplate
+    prefix put whole-corpus fractions into single band buckets — 10.1×
+    runtime at 2.9× tokens, i.e. the bucket self-join went quadratic): a band
     bucket holding more than the cap never enters the quadratic
     self-join. What happens to it instead is ``oversize_policy``:
 
@@ -296,19 +296,18 @@ def minhash_lsh_pairs(
       consecutive-id chain, whose O(bucket) diameter would stall
       dup_clusters' label propagation), which is all downstream
       clustering needs; only the exhaustive per-pair list is
-      sacrificed. Found by the round-9 dupheavy axis: with the
-      original drop policy, a corpus where 85 % of documents are
-      mirrors of five near-identical canonicals returned ZERO pairs —
-      every band bucket merged past the cap and the whole duplicated
-      mass vanished from the pair stream (SCALE.md round-9 session 3).
-    - ``"drop"``: the round-8 behavior — oversized buckets are skipped
+      sacrificed. Found by the dupheavy axis: with the original drop
+      policy, a corpus where 85 % of documents are mirrors of five
+      near-identical canonicals returned ZERO pairs — every band bucket
+      merged past the cap and the whole duplicated mass vanished from
+      the pair stream.
+    - ``"drop"``: the original behavior — oversized buckets are skipped
       entirely. Opt-in for when the pair stream must contain only
       complete bucket families (e.g. recall accounting against a cap).
 
-    The cap IS the default (64, flipped round 9 per the r8 verdict: the
-    uncapped bucket join is a proven quadratic scale-killer on
-    boilerplate corpora — 5.6–10× runtime at 2.9× tokens in the textskew
-    probe — i.e. on the NORMAL shape of web-crawl data). Pass
+    The cap IS the default (64: the uncapped bucket join is a proven
+    quadratic scale-killer on boilerplate corpora — 5.6–10× runtime at
+    2.9× tokens in the textskew probe — i.e. on the NORMAL shape of web-crawl data). Pass
     ``max_band_bucket=None`` to opt in to exact full-recall semantics on
     small/curated corpora. ``lsh_recall_audit`` measures what the cap
     costs on a given corpus (run it per policy to price the trade).
@@ -351,8 +350,8 @@ def minhash_lsh_pairs(
         # bucket's fate BEFORE the self-join, so an oversized bucket's
         # quadratic pair set is never materialized
         # min(id) rides the same map-side-combined groupBy that counts
-        # the bucket — one row per bucket, no extra pass (r9 ADVICE: the
-        # previous per-bucket Window shuffled the ENTIRE mega-bucket —
+        # the bucket — one row per bucket, no extra pass (a per-bucket
+        # Window shuffled the ENTIRE mega-bucket —
         # the whole-corpus-fraction bucket the cap exists to defend
         # against — into a single task; linear, but a straggler/spill
         # risk at exactly the scale this feature targets)
@@ -432,7 +431,7 @@ def minhash_lsh_pairs(
     # contamination ledger uses the same argument), and the shuffle bytes
     # of the widest exchange in the pipeline roughly halve — measured at
     # the 64× local memory boundary where this operator's spill regime
-    # begins (SCALE.md round-8)
+    # begins (SCALE.md "Dedup at 100 TB")
     shingle_h = F.unhex(F.md5("shingle")).alias("__shh")
     sh_a = sh.select(F.col("id").alias("id_a"), shingle_h)
     sh_b = sh.select(F.col("id").alias("id_b"), shingle_h)
@@ -571,33 +570,6 @@ def embedding_near_dup_pairs(
     return all_pairs_cosine(df, vec_col, id_col, threshold, buckets)
 
 
-def auto_shuffle_partitions(
-    n_rows: int,
-    bytes_per_row: int = 24,
-    target_mb: int = 64,
-    lo: int = 32,
-    hi: int = 4096,
-) -> int:
-    """SCALE.md's spill-aware shuffle-partition sizing rule as code:
-    partitions ∝ estimated shuffle rows / target block size, clamped.
-
-    The 64× weak-scaling mapping (SCALE.md round-8) showed the iterative
-    heavyweights' superlinear exponents were per-partition sort blocks
-    outgrowing the heap — raising partitions 32→128 at 64× recovered
-    ~20 % by itself. ``target_mb`` = 64 keeps each partition's sort
-    block well inside an executor's task memory at any corpus size;
-    ``bytes_per_row`` defaults to the (bigint, bigint) edge/label tuple
-    + shuffle framing. Clamped below by the session default (32) and
-    above by a sanity cap (a 100 TB run tunes `hi` to its executor
-    count × cores × 2-3, the standard Spark sizing guidance).
-    """
-    if n_rows < 0:
-        raise ValueError(f"n_rows must be >= 0: {n_rows}")
-    target_rows = max(1, (target_mb * 1024 * 1024) // max(1, bytes_per_row))
-    want = (n_rows + target_rows - 1) // target_rows
-    return max(lo, min(hi, int(want)))
-
-
 def dup_clusters(
     df: DataFrame,
     pairs: DataFrame,
@@ -625,23 +597,11 @@ def dup_clusters(
     least one edge — not the full corpus. Non-duplicate docs (the vast
     majority at 100 TB; dup rate is typically single-digit %) never enter
     an iteration; they label themselves in one final left join. Per-round
-    cost is therefore ∝ |E|, independent of corpus size.
-
-    ``SPARK_GRAFT_AUTO_PARTITIONS=1`` engages SCALE.md's spill-aware
-    sizing rule (:func:`auto_shuffle_partitions`): edges and each
-    round's labels are hash-partitioned on the join key at partitions ∝
-    |E| / target block size, so (a) the per-round join reuses the
-    co-partitioning instead of re-exchanging both sides at the session
-    default, and (b) per-partition sort blocks stay inside task memory
-    past the 64× local point where the default 32 partitions hit the
-    heap cliff (SCALE.md round-8/round-9). Default OFF: bench/driver
-    scales sit far inside the linear regime and comparability outranks
-    headroom there. (The r8 md5-payload trick does not apply here: the
-    loop already carries only (bigint, bigint) tuples — 16 bytes — so
-    there is nothing wider to hash down.)
+    cost is therefore ∝ |E|, independent of corpus size. (The md5-payload
+    trick of ``minhash_lsh_pairs`` does not apply here: the loop already
+    carries only (bigint, bigint) tuples — 16 bytes — so there is nothing
+    wider to hash down.)
     """
-    import os as _os
-
     # persist the pair list BEFORE symmetrizing: the union's two branches
     # share one cached evaluation of the (expensive) pair-generation plan
     # instead of computing it twice
@@ -649,19 +609,13 @@ def dup_clusters(
     edges = _persist(
         e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
     )
-    nparts = None
-    if _os.environ.get("SPARK_GRAFT_AUTO_PARTITIONS", "").strip() == "1":
-        # edges is persisted: the count is one cheap action over the
-        # cached frame, paid once before the loop
-        nparts = auto_shuffle_partitions(edges.count())
-        edges = _persist(edges.repartition(nparts, "dst"))
     # Round 1 is join-free: the initial labelling is the identity map,
     # so the first round's neighbor-min is just min(dst) per src (plus
     # the vertex's own id via its implicit self-loop) — fold it into
     # label INITIALIZATION as one |E|-row groupBy. The former shape
     # materialized identity labels (a distinct + checkpoint) and then
-    # paid a full edges⋈labels join for round 1 (r12-opt: one join
-    # round removed from every dup_clusters call).
+    # paid a full edges⋈labels join for round 1 (one join round
+    # removed from every dup_clusters call).
     labels = (
         edges.groupBy("src")
         .agg(F.min("dst").alias("__nmin"))
@@ -671,8 +625,6 @@ def dup_clusters(
         )
         .localCheckpoint()
     )
-    if nparts is not None:
-        labels = labels.repartition(nparts, "id").localCheckpoint()
     # Self-loops fold the "keep own label" term into the neighbor min:
     # new_label(s) = min over {labels[d] : (s,d) ∈ edges ∪ self-loops},
     # so each round is ONE join + ONE groupBy — the former formulation's
@@ -702,8 +654,8 @@ def dup_clusters(
     # the id type is integral: a non-numeric id (string doc ids) would
     # cast to NULL, the sum would read NULL, and the NULL-means-empty
     # branch below would silently return the round-1 partial labelling —
-    # exactly the silent-partial failure this function must never emit
-    # (r12 ADVICE, medium). Fail loud up front instead.
+    # exactly the silent-partial failure this function must never emit.
+    # Fail loud up front instead.
     _label_t = labels.schema["label"].dataType.simpleString()
     if _label_t not in ("tinyint", "smallint", "int", "bigint"):
         raise TypeError(
@@ -744,10 +696,6 @@ def dup_clusters(
                     F.col("label"), F.coalesce(F.col("__llbl"), F.col("label"))
                 ).alias("label"),
             )
-        if nparts is not None:
-            # keep every round's checkpointed labels id-partitioned so the
-            # next round's edges⋈labels reuses the co-partitioning
-            stepped = stepped.repartition(nparts, "id")
         labels = stepped.localCheckpoint()
         s = _label_sum(labels)
         converged = s == prev_sum
@@ -1245,8 +1193,8 @@ def edit_distance_verify(
     documents (lowercase-fold, non-alphanumerics to space, collapsed
     whitespace) — the usual ER contract, and the CROSS-ENGINE-EXACT
     one: Spark's levenshtein counts CODEPOINTS while DuckDB's counts
-    BYTES (measured: lev('é','e') = 1 vs 2 — SCALE.md round-9 unicode
-    axis), so raw-mode distances agree only on ASCII text; normalized
+    BYTES (measured: lev('é','e') = 1 vs 2 — SCALE.md "Text analysis"),
+    so raw-mode distances agree only on ASCII text; normalized
     text is pure ASCII by construction, where byte == codepoint. Raw
     mode (default) keeps the engine-native codepoint distance for
     library users; the graded catalog entry pins normalize=True.
@@ -1318,10 +1266,11 @@ def prefix_jaccard_pairs(
     equi-key (id, shingle) hash join — cost Σ_cand |A|, never an
     all-pairs pass. The per-doc ranking window partitions BY DOC. No
     broadcast hints anywhere — sizes/frequency frames are
-    corpus-proportional, AQE decides (the r5-verdict broadcast lesson).
+    corpus-proportional, AQE decides (a forced broadcast of a
+    corpus-proportional frame OOMs the driver at scale).
 
-    Measured trade-off (SCALE.md round-6): on the benign-df synthetic
-    sf0.1 corpus the naive full inverted join is ~2.5× faster — prefix
+    Measured trade-off (SCALE.md "Dedup at 100 TB"): on the benign-df
+    synthetic sf0.1 corpus the naive full inverted join is ~2.5× faster — prefix
     filtering pays a dfreq pass + per-doc ranking that only amortizes
     when stop-shingles make Σ df² explode. This operator is the
     heavy-tail/large-corpus exact path; ngram_jaccard_pairs remains the

@@ -105,7 +105,7 @@ def bm25_search(
     with the rational idf (N − df + 0.5)/(df + 0.5) (ln-free, same ordering
     as the textbook Robertson idf for df < N/2 — see module docstring).
 
-    100 TB plan (r12-opt one-pass form): ONE lexer explode feeds ONE
+    100 TB plan (one-pass form): ONE lexer explode feeds ONE
     map-side-combining groupBy(id) carrying dl plus a conditional tf
     column per query term (|query| is a literal handful, so the row
     stays narrow); N, avgdl and every per-term df collapse into a
@@ -128,7 +128,6 @@ def bm25_search(
         # empty query: no term can hit, so the result is the empty
         # (id, bm25) frame — the pre-r12 join-chain shape returned this
         # gracefully, while reduce() over zero per-term columns raises
-        # (r12 ADVICE guard)
         return docs.select(
             F.col(id_col), F.lit(None).cast("double").alias("bm25")
         ).limit(0)

@@ -538,7 +538,7 @@ def ppswor_sample_by_group(
     the group), τ is a conditional max inside the same partition,
     nothing broadcasts, nothing collects.
 
-    NULL contract (r8 ADVICE): rows with a NULL ``key_col`` are EXCLUDED
+    NULL contract: rows with a NULL ``key_col`` are EXCLUDED
     before ranking — a NULL key has no deterministic uniform (md5 of
     NULL → NULL → NULL __e), and Spark's ASC NULLS FIRST would rank it
     rn=1 so it always stole a sample slot with NULL est math, while SQL
@@ -597,7 +597,7 @@ def token_budget_allocation(
     and a GLOBAL token budget into per-source token allocations and
     sampling rates with EXACT integer accounting — the operator that
     converts DSIR/quality-classifier scores into an actual training
-    mixture (VERDICT r8 staged-tier brief; composes with
+    mixture (composes with
     :func:`ppswor_sample_by_group`, which then draws each source's
     allocation without replacement).
 
@@ -678,8 +678,8 @@ def token_budget_allocation(
     # keeps every share an exact floor division. All share PRODUCTS ride
     # decimal(38,0): w·n, B·d and L·d overflow int64 inside the 100 TB
     # envelope (B·d ~ 1e13·1e16 = 1e29; int64 tops out at 9.2e18), and
-    # ANSI Spark would abort the job — measured, SCALE.md round-9
-    # "numeric-magnitude axis". Quotients (token counts) stay bigint.
+    # ANSI Spark would abort the job — measured, SCALE.md
+    # "Aggregations". Quotients (token counts) stay bigint.
     r1 = per.join(F.broadcast(tot)).select(
         "*",
         F.when(

@@ -525,7 +525,7 @@ def mmr_rerank(
         # lam·sim − mu·pen here is the identical IEEE expression the
         # join formulation evaluated.
         #
-        # NULL/NaN contract (r12 ADVICE, documented choice): pd.isna maps
+        # NULL/NaN contract (documented choice): pd.isna maps
         # BOTH SQL NULL and NaN to None, i.e. ranked last. cosine_sim
         # yields NULL (never NaN) for zero-magnitude or NaN-element
         # vectors — `when(n > 0, …)` returns NULL on a false or NaN

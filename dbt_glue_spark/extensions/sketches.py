@@ -320,7 +320,7 @@ def countmin_build(
     ``weight_col`` builds the IDENTICAL sketch from pre-aggregated
     (value, count) rows — cell cnt = Σ weights = the instance count —
     so a caller that already holds per-value counts pays ``depth`` md5s
-    per DISTINCT value instead of per instance (r12-opt: the md5 bucket
+    per DISTINCT value instead of per instance (the md5 bucket
     arithmetic, not the shuffle, is this operator's cost at any scale).
     """
     assert width & (width - 1) == 0, "width must be a power of two (exact double math)"
@@ -567,9 +567,8 @@ def histogram_quantiles(
 ) -> DataFrame:
     """Approximate quantiles from a fixed-width histogram: (q, estimate).
 
-    One output row PER DISTINCT quantile in ``qs`` (r12 ADVICE: the
-    one-pass walk groups by q, so a duplicated entry in ``qs`` yields one
-    row, not two — ``qs`` is deduped explicitly below to make that the
+    One output row PER DISTINCT quantile in ``qs`` (the one-pass walk
+    groups by q, so a duplicated entry in ``qs`` yields one row, not two — ``qs`` is deduped explicitly below to make that the
     documented contract rather than a groupBy accident).
 
     Two passes — exact (min, max, n), then a ``buckets``-cell count

@@ -1302,8 +1302,8 @@ def vocab_growth(
         F.count("*").cast("bigint").alias("n_docs"),
         # coalesce: a bucket whose docs ALL have NULL text sums to NULL,
         # but the oracle's COALESCE(SUM(len(toks)),0) emits 0 — match it
-        # (r8 ADVICE: divergence empirically verified on all-NULL-text
-        # bucket slices of the dirty profile)
+        # (divergence empirically verified on all-NULL-text bucket
+        # slices of the dirty profile)
         F.coalesce(F.sum(F.size("__toks")), F.lit(0))
         .cast("bigint")
         .alias("n_tokens"),
@@ -1429,7 +1429,7 @@ def gopher_quality_flags(
     Models" appendix A1.1; the FineWeb reimplementation keeps the same
     thresholds) — per document the integer metrics and one boolean per
     rule, so a curation pipeline can both filter and AUDIT which rule
-    fired (VERDICT r8 staged-tier brief item 5c):
+    fired:
 
     - ``min_words_ok`` / ``max_words_ok``: 50 ≤ n_words ≤ 100 000;
     - ``mean_word_len_ok``: mean word length in [3, 10] — integer

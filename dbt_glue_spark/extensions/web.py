@@ -6,8 +6,7 @@ under utm-decorated, fragment-suffixed, case-shifted variants, and a
 handful of mega-domains (template farms, mirrors) would otherwise
 dominate the corpus. The reference engine has no web layer (it is a
 warehouse adapter — dbt/adapters/glue/impl.py); these extend the dedup
-family per the round-8 verdict's staged-tier brief (VERDICT r8 "Next
-round" item 5a).
+family to the crawl side.
 
 Design rules shared with the rest of the extension layer:
 

@@ -37,7 +37,7 @@ def tokenize_once(df, text_col: str, keep: list[str], lower: bool = False):
 # and final sigma is context-sensitive (ΣΟΦΟΣ → σοφος) — while DuckDB's
 # utf8proc lowercases per-codepoint (İ → 'i', Σ → 'σ' everywhere). These
 # are the ONLY two divergence classes between the engines (measured,
-# SCALE.md round-9 unicode axis), and both poison downstream
+# SCALE.md "Text analysis"), and both poison downstream
 # tokenization: the stray U+0307 splits 'istanbul' into 'i'+'stanbul'
 # under [a-z]+ extraction and turns one normalized token into two.
 # Folding AFTER lower — delete U+0307, map ς → σ — is symmetric (both

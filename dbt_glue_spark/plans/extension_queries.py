@@ -2582,7 +2582,7 @@ def ext_countmin_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     # NOT persisted (r12 A/B: 1.90 s vs 2.15 s cached): the token
     # explode is map-only codegen; recomputing it for the sketch and
     # the exact-count branches beats caching the exploded strings.
-    # r12-opt: BOTH branches now start from the same per-token count
+    # BOTH branches now start from the same per-token count
     # aggregate (identical subtree → AQE stage reuse runs it once), and
     # the sketch is built WEIGHTED from it — cell counts are identical
     # (Σ per-token tf = instance count) while the 4-md5-per-row bucket

@@ -3,9 +3,8 @@ with the same :class:`QuerySpec` contract and exact-DuckDB oracles as
 the rest of the catalog (tests/test_round10_staged.py, every
 pathological data profile).
 
-The tier is the VERDICT r8 "Next round" item-5 brief — the crawl-side /
-mixture-side operators a production training-data pipeline runs before
-and after document dedup:
+The tier is the crawl-side / mixture-side operators a production
+training-data pipeline runs before and after document dedup:
 
 - ``ext_url_dedup`` — URL canonicalization + exact URL-level dedup
   (web.url_dedup): tracking params, case, default ports, fragments and
@@ -895,10 +894,10 @@ def ext_curriculum_stages(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Non-finite telemetry quarantine (round-9 IEEE-axis adjudication): the
+# Non-finite telemetry quarantine (the IEEE data axis): the
 # engine's float-determinism contract makes every decimal accumulator's
 # domain FINITE numbers — NaN/Inf input aborts loud under ANSI (38
-# catalog queries measured, SCALE.md "Round-9 IEEE axis"). These two
+# catalog queries measured, SCALE.md "Aggregations"). These two
 # operators are the production sequence: audit -> sanitize -> aggregate.
 # The catalog entries synthesize a messy value column from event_id
 # (the URL-oracle discipline) so the oracle derives expectations

@@ -3,9 +3,9 @@ with the same :class:`QuerySpec` contract and exact-DuckDB oracles as
 the rest of the catalog (tests/test_round11_staged.py, every
 pathological data profile).
 
-The tier is the r9 VERDICT "Next round" item-5 brief — MULTIMODAL DEDUP,
-the one LLM-pipeline family where the catalog had analysis
-(multimodal.py features/resize/resample) but no dedup:
+The tier is MULTIMODAL DEDUP, the one LLM-pipeline family where the
+catalog had analysis (multimodal.py features/resize/resample) but no
+dedup:
 
 - ``ext_image_dhash_dedup`` — perceptual exact-duplicate manifest over
   dHash (brightness-shifted re-encodes collapse onto one hash);

@@ -2,10 +2,9 @@
 with the same :class:`QuerySpec` contract and exact-DuckDB oracles as
 the rest of the catalog (tests/test_round12_staged.py).
 
-The tier is the r10 VERDICT "Next round" item-6 brief — CROSS-MODAL
-PAIRS, the one LLM-pipeline seam with analysis on both sides (text
-dedup, perceptual media dedup) but, before this tier, no JOINT
-operator (``extensions/crossmodal.py``):
+The tier is CROSS-MODAL PAIRS, the one LLM-pipeline seam with analysis
+on both sides (text dedup, perceptual media dedup) but, before this
+tier, no JOINT operator (``extensions/crossmodal.py``):
 
 - ``ext_caption_consistency`` — the mislabeled-pair census: for every
   perceptual image class (dHash over the REAL decode) with ≥ 2
@@ -701,7 +700,7 @@ def streaming_pair_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
             .trigger(availableNow=True)
             .start()
         )
-        # loud-timeout contract (r10 ADVICE on the image frontier): a
+        # loud-timeout contract (as on the image frontier): a
         # slow box must fail here, not proceed with a partial emitted
         # set misattributed to the operator
         if not q.awaitTermination(300):

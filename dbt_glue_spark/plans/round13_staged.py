@@ -2,10 +2,10 @@
 with the same :class:`QuerySpec` contract and exact-DuckDB oracles as
 the rest of the catalog (tests/test_round13_staged.py).
 
-The tier is the r11 VERDICT "Next round" item-6 brief — the EMBEDDING-
-SIDE curation seam. The embeddings table already carries kNN (brute/
-LSH/IVF/quantized), k-means, SemDeDup-style prototypical dedup
-(``ext_semantic_dedup``) and an LSH recall audit; what it lacked:
+The tier is the EMBEDDING-SIDE curation seam. The embeddings table
+already carries kNN (brute/LSH/IVF/quantized), k-means, SemDeDup-style
+prototypical dedup (``ext_semantic_dedup``) and an LSH recall audit;
+what it lacked:
 
 - ``ext_semantic_keep_best`` — semantic dedup with QUALITY-ARGMAX
   survivor selection (``clustering.semantic_keep_best``): semantic

@@ -2,7 +2,7 @@
 with the same :class:`QuerySpec` contract and exact-DuckDB oracles as
 the rest of the catalog (tests/test_round8_staged.py, ×7 data profiles).
 
-The three operators close VERDICT r6 item 4:
+The operators:
 
 - ``ext_exact_substring_spans`` — stride-1 Lee-et-al. ExactSubstr
   coverage (dedup.exact_substring_spans);

@@ -3,7 +3,8 @@ with the same :class:`QuerySpec` contract and exact-DuckDB oracles as
 the rest of the catalog (tests/test_round9_staged.py, every
 pathological data profile).
 
-The first three operators close VERDICT r7 item 4; the last two extend
+The first three operators add drift, weighted sampling and cross-run
+decontamination; the last two extend
 the corpus-audit family with the GROWTH view (the static spectrum lives
 in zipf_rank_buckets):
 

@@ -37,7 +37,6 @@ def accepted_values(
     """Group-by counts of values outside the accepted list. ``quote_values``
     mirrors the reference's quote toggle (accepted_values.sql:14-20) —
     with quote=False the column is compared unquoted (numeric semantics)."""
-    col = F.col(column) if quote_values else F.col(column).cast("double")
     vals = values if quote_values else [float(v) for v in values]
     return (
         df.groupBy(F.col(column).alias("value_field"))

@@ -29,7 +29,7 @@ from pyspark.storagelevel import StorageLevel
 # eviction mid-stream (any _persist-heavy batch operator interleaving)
 # would silently fall back to recomputing the decode-bearing ledger
 # lineage per trigger — the exact per-trigger re-decode the eager
-# materialization exists to prevent (r11 ADVICE). This registry never
+# materialization exists to prevent. This registry never
 # evicts; lifetime is caller-owned via release_static_caches() once the
 # stream is stopped. Footprint is ledger-sized (8-24 bytes per known
 # class), not corpus-sized.
@@ -445,7 +445,7 @@ def image_frontier_stream(
         .select("dhash")
     )
     # _persist_static (not dedup._persist): the bounded-LRU registry can
-    # evict this frame mid-stream (r11 ADVICE — nothing enforces the
+    # evict this frame mid-stream (nothing enforces the
     # availableNow assumption the old comment leaned on), silently
     # re-running the ledger lineage per micro-batch; the stream-static
     # registry never evicts and is reclaimed by release_static_caches()
@@ -537,7 +537,7 @@ def pair_frontier_stream(
         pairs_stream, caption_col, content_col, id_col
     ).select("caption_key", "dhash")
     # stream-static registry, not the bounded LRU — same eviction
-    # rationale as image_frontier_stream above (r11 ADVICE)
+    # rationale as image_frontier_stream above
     seen = _persist_static(seen_pairs.select("caption_key", "dhash").distinct())
     seen.count()  # materialize NOW — micro-batches hit the cache
     return (
@@ -846,7 +846,7 @@ def _mint_instance(checkpoint: str) -> str:
     the rest into stale pre-restart state. The marker file cannot alias
     them: it is deleted with the directory.
 
-    Commit ladder (ADVICE r6: link-unsupported ≠ read-only): hard-link
+    Commit ladder (link-unsupported ≠ read-only): hard-link
     first; where the store refuses link() but is otherwise writable
     (some FUSE/object-store mounts: EPERM/ENOTSUP), fall back to an
     O_CREAT|O_EXCL exclusive create of the marker itself — still

@@ -9,7 +9,7 @@ be a FLAT, hashable, orderable scalar type. A nested result column
 unhashable — ``sort_values`` raises ``TypeError`` inside the *harness*,
 burning the query's sample slot with an ``err`` row even though the answer
 is correct. This is exactly what happened to ``array_agg_orders`` in round
-4 (CORRECTNESS_r04.json: ``unhashable type: 'numpy.ndarray'``).
+4 (the harness reported ``unhashable type: 'numpy.ndarray'``).
 
 One pass over the catalog applies two gates:
 
@@ -28,6 +28,9 @@ Gate 2 executes every result, so the test is marked ``slow``; see
 """
 
 from __future__ import annotations
+
+import ast
+from pathlib import Path
 
 import pytest
 from pyspark.sql import types as T
@@ -97,3 +100,58 @@ def test_catalog_registers_303_queries_once():
     with pytest.raises(ValueError, match=name):
         register(name, None)(lambda spark, sf_dir: None)
     assert SPECS()[name] is spec
+
+
+# The environment variables the library may read: deployment settings
+# (cores, driver heap, conf overrides, cluster master), not behaviour
+# switches. A key added here is a new knob: prefer a constant or a value
+# derived from the input.
+ALLOWED_ENV_KEYS = {
+    "SPARK_GRAFT_CPUS",
+    "SPARK_GRAFT_DRIVER_MEM",
+    "SPARK_GRAFT_CONF_JSON",
+    "SPARK_MASTER",
+}
+
+
+def _env_keys(tree: ast.AST) -> set[str]:
+    """String keys passed to ``<x>.environ.get``, ``getenv`` or
+    ``<x>.environ[...]``, whatever ``os`` is imported as. A key that is
+    not a string literal is reported as ``<non-literal>``."""
+
+    def is_environ(node: ast.AST) -> bool:
+        return (isinstance(node, ast.Attribute) and node.attr == "environ") or (
+            isinstance(node, ast.Name) and node.id == "environ"
+        )
+
+    def key(node: ast.AST | None) -> str:
+        if isinstance(node, ast.Constant) and isinstance(node.value, str):
+            return node.value
+        return "<non-literal>"
+
+    keys = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Call):
+            f = node.func
+            env_get = isinstance(f, ast.Attribute) and f.attr == "get" and is_environ(f.value)
+            getenv = (isinstance(f, ast.Attribute) and f.attr == "getenv") or (
+                isinstance(f, ast.Name) and f.id == "getenv"
+            )
+            if env_get or getenv:
+                keys.add(key(node.args[0] if node.args else None))
+        elif isinstance(node, ast.Subscript) and is_environ(node.value):
+            keys.add(key(node.slice))
+    return keys
+
+
+def test_library_reads_only_deployment_env_vars():
+    """No behaviour switch hides in an environment variable: every key the
+    library reads from the environment is a deployment setting."""
+    root = Path(__file__).resolve().parents[1] / "dbt_glue_spark"
+    found: dict[str, list[str]] = {}
+    for path in sorted(root.rglob("*.py")):
+        for k in _env_keys(ast.parse(path.read_text(), filename=str(path))):
+            found.setdefault(k, []).append(str(path.relative_to(root)))
+    assert "SPARK_GRAFT_CPUS" in found, f"scan found no known key under {root}"
+    extra = {k: v for k, v in found.items() if k not in ALLOWED_ENV_KEYS}
+    assert not extra, f"environment reads outside the deployment set: {extra}"

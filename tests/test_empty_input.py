@@ -18,9 +18,8 @@ down. Round-5 probe findings fixed here and regression-gated:
 
 The FULL catalog sweep (every query in SPECS() against a zero-row
 directory) runs green over all queries and lives behind the
-``slow`` marker since round 13 (r12 verdict item 3: the default suite
-must fit the driver's pytest window); the fixed regression surfaces run
-on every default invocation. Run the sweep with ``pytest -m slow``.
+``slow`` marker (the default suite stays short); the fixed regression
+surfaces run on every default invocation. Run the sweep with ``pytest -m slow``.
 """
 
 from __future__ import annotations
@@ -74,10 +73,9 @@ def test_fixed_queries_survive_empty_input(spark, empty_sf):
 
 @pytest.mark.slow
 def test_full_catalog_survives_empty_input(spark, empty_sf):
-    """Every declared query against zero-row inputs (r10 verdict item 7).
-    ~4 min, so behind the ``slow`` marker since round 13 (r12 verdict
-    item 3); the quick test above keeps the fixed regression surfaces on
-    every default run."""
+    """Every declared query against zero-row inputs. ~4 min, so behind
+    the ``slow`` marker; the quick test above keeps the fixed regression
+    surfaces on every default run."""
     _sweep_empty(spark, empty_sf, list(SPECS()))
 
 

@@ -32,8 +32,8 @@ from gen_pathological import mutate  # noqa: E402
 from dbt_glue_spark.plans.catalog import SPECS
 from dbt_glue_spark.sources.registry import TABLES, load_table
 
-# Promotion-gate / full-sweep module: deselected by default so the suite
-# fits the driver's pytest window (r12 verdict item 3); `pytest -m slow` runs it.
+# Promotion-gate / full-sweep module: deselected by default so the default suite
+# stays short; `pytest -m slow` runs it.
 pytestmark = pytest.mark.slow
 
 # Every query that diverged (crashed or mismatched) on dirty data during
@@ -195,8 +195,8 @@ def test_streaming_pathological_axes(spark, sf_dir, tmp_path_factory, variant):
 
     Each of the 12 streaming pipelines stages a real file stream
     (~10-30 s), so the 72-run cross-product is parity-marked rather than
-    suite-default. Round-6 baseline: all 72 green, zero divergences
-    (SCALE.md "Round-6 streaming × pathological axes"). The empty axis
+    suite-default. All green, zero divergences (SCALE.md "Pathological
+    data axes"). The empty axis
     is the streaming twin of tests/test_empty_input.py: a zero-row
     stream must start, drain, commit, and agree with the batch oracle
     on empty tables (watermarks with no data, ledgers with no batches).
@@ -341,7 +341,7 @@ def test_hot_variant_keys_reference_existing_dimension_rows(spark, sf_dir):
 # context-sensitive final sigma), byte-vs-codepoint levenshtein, and
 # Python's unicode \s in the UDTF — all fixed via the symmetric fold
 # contract (functions/text.fold_lower), normalize=True edit distance,
-# and re.ASCII. See SCALE.md "Round-9 unicode axis".
+# and re.ASCII. See SCALE.md "Text analysis".
 UNICODE_REGRESSION_SET = [
     "ext_bm25_search",
     "ext_bpe_segmented_words",

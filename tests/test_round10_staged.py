@@ -13,8 +13,8 @@ from pyspark.sql import functions as F
 from dbt_glue_spark.plans import round10_staged
 from dbt_glue_spark.plans.catalog import SPECS
 
-# Heavy module: deselected by default so the suite
-# fits the driver's pytest window (r12 verdict item 3); `pytest -m slow` runs it.
+# Heavy module: deselected by default so the default suite
+# stays short; `pytest -m slow` runs it.
 pytestmark = pytest.mark.slow
 
 ROUND10_SPECS = {

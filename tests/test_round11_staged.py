@@ -157,7 +157,7 @@ def test_image_near_dup_pairs_rejects_bad_params(spark):
 
     df = spark.createDataFrame([(0, None)], "media_id long, content binary")
     # ValueError (not assert) so the contract survives `python -O`,
-    # matching the sibling validators in audit.k_anonymity (r10 ADVICE).
+    # matching the sibling validators in audit.k_anonymity.
     with pytest.raises(ValueError):
         image_near_dup_pairs(df, max_hamming=4, bands=4)  # not exhaustive
     with pytest.raises(ValueError):

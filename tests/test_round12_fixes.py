@@ -1,4 +1,4 @@
-"""Round-12 fixes (the r11 ADVICE findings + bench hygiene):
+"""Round-12 fixes, each pinned by a test below:
 
 1. ``paired_keep_best`` persists its signature frame — the Arrow-batched
    decode lineage materializes once per invocation instead of ~5-6×
@@ -13,9 +13,6 @@
 3. ``pair_signatures`` skips NULL pair ids (Arrow hands a nullable int
    column over as float64 — ``int(nan)`` used to crash the stage)
    following the module's visible-exclusion NULL contract.
-4. ``bench._free_sidecar_name`` never returns an existing file: after
-   the 27 stamped names are exhausted it degrades to a uuid suffix
-   instead of silently overwriting the 'z' sibling.
 """
 
 from __future__ import annotations
@@ -135,22 +132,3 @@ def test_pair_signatures_null_id_skipped_not_crashed(spark):
     )
     got = {r.pair_id for r in pair_signatures(df).collect()}
     assert got == {0, 7}
-
-
-# ---------------------------------------------------------------------------
-# 4. bench sidecar naming: exhaustion degrades, never overwrites
-# ---------------------------------------------------------------------------
-
-
-def test_free_sidecar_name_exhaustion_never_reuses(tmp_path):
-    import bench
-
-    name = "BENCH_DETAIL_r99.json"
-    assert bench._free_sidecar_name(str(tmp_path), name) == name
-    (tmp_path / name).write_text("{}")
-    assert bench._free_sidecar_name(str(tmp_path), name) == "BENCH_DETAIL_r99a.json"
-    for c in "abcdefghijklmnopqrstuvwxyz":
-        (tmp_path / f"BENCH_DETAIL_r99{c}.json").write_text("{}")
-    got = bench._free_sidecar_name(str(tmp_path), name)
-    assert got.startswith("BENCH_DETAIL_r99-") and got.endswith(".json")
-    assert not (tmp_path / got).exists()

@@ -1,4 +1,4 @@
-"""Round-13 fixes (the r12 ADVICE findings):
+"""Round-13 fixes, each pinned by a test below:
 
 1. ``dup_clusters`` fails LOUD on non-integral id columns: the exact
    decimal label-sum convergence test would read NULL for string ids and

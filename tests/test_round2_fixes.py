@@ -156,7 +156,7 @@ def _persistent_rdd_ids(spark):
 def test_release_caches_frees_persisted_intermediates(spark):
     # Absolute getPersistentRDDs().size() comparisons are flaky in the
     # shared session (foreign caches can be cleaned between the before
-    # and after reads, r9 verdict "What's wrong #1") — assert on the SET
+    # and after reads) — assert on the SET
     # DIFFERENCE of persistent-RDD ids instead: a new id appears after
     # exact_dedup, and exactly those ids are gone after release_caches.
     from dbt_glue_spark.extensions import dedup

@@ -1,4 +1,4 @@
-"""Regression tests for the round-5 advisor findings (ADVICE.md r4):
+"""Regression tests for the round-5 review findings:
 
 - hard_negatives silently returned zero rows when the rank-1 positive had
   fewer than shingle_n tokens, and silently dropped short candidates;

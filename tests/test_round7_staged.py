@@ -14,8 +14,8 @@ from pyspark.sql import functions as F
 from dbt_glue_spark.plans import round7_staged
 from dbt_glue_spark.plans.catalog import SPECS
 
-# Heavy module: deselected by default so the suite
-# fits the driver's pytest window (r12 verdict item 3); `pytest -m slow` runs it.
+# Heavy module: deselected by default so the default suite
+# stays short; `pytest -m slow` runs it.
 pytestmark = pytest.mark.slow
 
 ROUND7_SPECS = {
@@ -122,8 +122,8 @@ def test_staged_plan_shapes(spark, sf_dir):
     """Scale-shape gates for the staged operators: top-k must plan as
     TakeOrderedAndProject (per-partition partial top-k, no global sort),
     and the only forced broadcasts are 1-row frames (tau / pair total) —
-    never a vocabulary- or corpus-proportional side (the r5-verdict
-    broadcast lesson, applied at authoring time)."""
+    never a vocabulary- or corpus-proportional side (a forced broadcast
+    of one OOMs the driver at scale)."""
     from dbt_glue_spark.extensions.sampling import weighted_sample
     from dbt_glue_spark.extensions.text_analysis import pmi_pairs
     from dbt_glue_spark.sources.registry import load_table
@@ -500,7 +500,7 @@ def test_prefix_jaccard_heavy_df_lossless(spark, sf_dir):
     """The regime prefix filtering exists for: a boilerplate-heavy corpus
     (stop-shingles with df ~ corpus size). Output must stay bit-identical
     to the naive full inverted join under the same integer threshold —
-    SCALE.md round-6 measured the 7.6x runtime win at sf0.1; this pins
+    SCALE.md "Dedup at 100 TB" gives the 7.6x runtime win at sf0.1; this pins
     the losslessness half of that claim in the suite."""
     from dbt_glue_spark.extensions.dedup import (
         _shingle_postings,

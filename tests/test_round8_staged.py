@@ -13,8 +13,8 @@ from dbt_glue_spark.plans import round8_staged
 from dbt_glue_spark.plans.catalog import SPECS
 from tools.check_parity import exact_compare
 
-# Heavy module: deselected by default so the suite
-# fits the driver's pytest window (r12 verdict item 3); `pytest -m slow` runs it.
+# Heavy module: deselected by default so the default suite
+# stays short; `pytest -m slow` runs it.
 pytestmark = pytest.mark.slow
 
 ROUND8_SPECS = {
@@ -179,7 +179,7 @@ def test_priority_sample_stream_replay_is_noop(spark, tmp_path):
 
 def test_staged8_parity_under_forced_spill(spark, sf_dir):
     """The round-8 pool through the same forced-spill axis the live
-    catalog faces (VERDICT r6 item 6 applied to the new tier): window/
+    catalog faces: window/
     SMJ/session-window buffers pushed through their external-sorter
     paths must not perturb any staged result."""
     from tests.test_parity_sweep import SPILL_CONFS

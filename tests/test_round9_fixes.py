@@ -1,5 +1,5 @@
-"""Round-9 fixes for the four r8 ADVICE findings — each test reproduces
-the advised defect scenario and pins the fixed contract:
+"""Round-9 fixes for four NULL-handling defects — each test reproduces
+the defect scenario and pins the fixed contract:
 
 1. vocab_growth: an all-NULL-text bucket must emit n_tokens=0 (the
    oracle's COALESCE), not NULL (medium — exact-parity gate breaker on
@@ -100,50 +100,3 @@ def test_drift_null_rate_change_not_tail_drift(spark):
     rows = distribution_drift(a, b, "doc_len", bucket_width=32, n_buckets=32).collect()
     assert len(rows) == 1 and rows[0].bucket == 0
     assert rows[0].abs_prop_diff == 0.0 and rows[0].chi2_term == 0.0
-
-
-# ---------------------------------------------------------------------------
-# dup_clusters auto-partition heuristic (VERDICT r8 item 7)
-# ---------------------------------------------------------------------------
-
-
-def test_auto_shuffle_partitions_formula():
-    from dbt_glue_spark.extensions.dedup import auto_shuffle_partitions
-
-    import pytest
-
-    # 64 MB / 24 B = 2_796_202 rows per partition
-    assert auto_shuffle_partitions(0) == 32          # lower clamp
-    assert auto_shuffle_partitions(1) == 32
-    assert auto_shuffle_partitions(2_796_202) == 32  # exactly one block
-    assert auto_shuffle_partitions(2_796_203) == 32  # ceil → 2, clamp 32
-    assert auto_shuffle_partitions(90_000_000) == 33  # past the clamp knee
-    assert auto_shuffle_partitions(10**12) == 4096   # upper clamp
-    # monotone in n_rows
-    prev = 0
-    for n in (10**6, 10**8, 10**9, 10**10, 10**11):
-        cur = auto_shuffle_partitions(n)
-        assert cur >= prev
-        prev = cur
-    with pytest.raises(ValueError, match="n_rows"):
-        auto_shuffle_partitions(-1)
-
-
-def test_dup_clusters_auto_partitions_invariant(spark, sf_dir, monkeypatch):
-    """SPARK_GRAFT_AUTO_PARTITIONS=1 must not change RESULTS — only the
-    physical partitioning of the propagation loop."""
-    from dbt_glue_spark.extensions.dedup import (
-        dup_clusters,
-        minhash_lsh_pairs,
-        release_caches,
-    )
-    from dbt_glue_spark.sources.registry import load_table
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    pairs = minhash_lsh_pairs(docs, threshold=0.5)
-    base = sorted(map(tuple, dup_clusters(docs, pairs).collect()))
-    release_caches()
-    monkeypatch.setenv("SPARK_GRAFT_AUTO_PARTITIONS", "1")
-    flagged = sorted(map(tuple, dup_clusters(docs, pairs).collect()))
-    release_caches()
-    assert flagged == base

@@ -15,8 +15,8 @@ from dbt_glue_spark.plans import round9_staged
 from dbt_glue_spark.plans.catalog import SPECS
 from tools.check_parity import exact_compare
 
-# Heavy module: deselected by default so the suite
-# fits the driver's pytest window (r12 verdict item 3); `pytest -m slow` runs it.
+# Heavy module: deselected by default so the default suite
+# stays short; `pytest -m slow` runs it.
 pytestmark = pytest.mark.slow
 
 ROUND9_SPECS = {

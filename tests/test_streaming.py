@@ -906,7 +906,7 @@ def test_mint_instance_concurrent_single_identity(tmp_path):
 def test_mint_instance_link_unsupported_uses_excl_create(tmp_path, monkeypatch):
     """Stores that refuse os.link but accept plain writes (FUSE/object
     mounts) must still mint a marker-file identity — the path-hash
-    degradation is reserved for genuinely read-only stores (ADVICE r6).
+    degradation is reserved for genuinely read-only stores.
     Concurrent minters on the O_EXCL path must still converge on ONE
     token."""
     import os
@@ -943,8 +943,8 @@ def test_mint_instance_readonly_store_degrades_with_warning(
     tmp_path, caplog, monkeypatch
 ):
     """Only a store that refuses even a plain create falls back to the
-    path hash, and the degradation is logged (silent aliasing was the
-    ADVICE r6 complaint). Write refusal is simulated by patching open()
+    path hash, and the degradation is logged (aliasing must not be
+    silent). Write refusal is simulated by patching open()
     — the suite runs as root, where chmod 555 doesn't block writes."""
     import builtins
     import hashlib

@@ -2,8 +2,8 @@
 
 For every catalog query: run the Spark DataFrame impl and the DuckDB oracle
 on the same sf dir, sort columns by name and rows by value, compare exactly.
-Exact equality here is a strictly stronger bar than the driver's value-hash,
-so green here ⇒ green in CORRECTNESS_r{N}.json.
+Exact equality (row values, not a value hash) is a strictly stronger bar than
+the driver's hash compare, so a query that passes here passes there too.
 
 Usage: python tools/check_parity.py [sf_dir] [query ...]
 """

@@ -16,8 +16,7 @@ in ratio operators, NULL join keys matching each other in the as-of
 window formulation, collect_list-vs-list() NULL handling, concat_ws
 dropping NULL operands, NULLS FIRST/LAST window-ordering defaults,
 DuckDB's -1.0 zero-vector cosine, NaN-poisoned pandas medians, and
-NULL-text crashes in a UDTF. See SCALE.md "Round-5 NULL/edge-semantics
-sweep".
+NULL-text crashes in a UDTF. See SCALE.md "Pathological data axes".
 
 A second axis, ``--variant=const``, replaces every double measure with a
 single constant and every document text with one identical string —
@@ -206,7 +205,7 @@ def mutate_hot(df, rows: int | None = 300):
     """Hot-key variant: 90 % of every FK/group key becomes one value —
     the extreme-skew shape that breaks single-partition windows and
     unsalted shuffles, and flushes nondeterministic tie-breaks (pinned
-    from the round-5 ad-hoc probe, SCALE.md 'Round-5 hot-key probe').
+    from the round-5 ad-hoc probe, SCALE.md 'Pathological data axes').
 
     rows=None keeps the full table — the perf-probe shape (skew
     degradation at sf0.1) as opposed to the 300-row parity shape."""
@@ -390,7 +389,7 @@ def mutate_ieee(df, rows: int = 300):
     catalog-wide plus two streaming-sink crashes). The production
     answer to non-finite telemetry is quarantine at ingestion
     (audit.nonfinite_audit / sanitize_nonfinite) — see SCALE.md
-    "Round-9 IEEE axis"."""
+    "Aggregations"."""
     base = df.limit(rows)
     cols = dict(df.dtypes)
     out = base

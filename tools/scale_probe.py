@@ -19,7 +19,7 @@ every timed run pays a real scan, not a cached lineage.
 Usage: python tools/scale_probe.py [--factors=2,8,32] [--probe=dedup|mmr|staged|staged8|staged9|staged10|staged11|staged12|staged13]
 Prints one JSON line: per-op seconds per factor + fitted exponents.
 A near-linear operator shows exponent ≈ 1 (ratio bound 1.5x of linear
-per SCALE.md policy); quadratic blowup would show ≈ 2.
+per SCALE.md "Pathological data axes"); quadratic blowup would show ≈ 2.
 
 ``--probe=mmr`` scales the QUERY set against a fixed corpus instead of
 scaling the corpus: mmr_rerank's k greedy rounds are joins keyed by
@@ -1079,7 +1079,7 @@ def probe_staged13(spark, sf_dir: str, factors: list[int]) -> tuple[dict, dict]:
     arithmetic here, so cluster wall-clock divides by cores). Expect
     near-linear exponents for the censuses and a super-linear assign
     term surfacing at the largest factors — that term is the algorithm,
-    not an implementation defect; SCALE.md adjudicates the reading.
+    not an implementation defect.
     ``semantic_dedup_recall`` is probed in its documented 100 TB shape:
     the all-pairs TRUTH side runs on a FIXED 1000-row labeled slice
     while the bucketed side sweeps the full corpus.

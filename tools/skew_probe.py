@@ -10,8 +10,8 @@ family keyed on the skewed columns, plus an unkeyed control.
 A ratio near 1 means the operator's cost is insensitive to key
 distribution (map-side partials, AQE skew handling, bounded windows); a
 large ratio flags a single-partition hot spot that would become a
-straggler at 100 TB. Results and adjudications live in SCALE.md
-("Round-6 skew-degradation probe").
+straggler at 100 TB. The measured ratios are in SCALE.md
+("Pathological data axes").
 
 A second axis, ``--axis=textskew``, probes the CONTENT-side hot shape
 (gen_pathological --variant=textskew: 90 % shared boilerplate prefix +
@@ -59,8 +59,7 @@ PROBED = [
     "ext_quality_top_per_source",    # window per source (90% src7)
     "q5_local_supplier_volume",      # join chain incl. suppkey/custkey
     "events_hourly",                 # control: group key untouched
-    # round-7 promoted heavyweights with skew-sensitive shapes (VERDICT
-    # r6 item 6): hot l_partkey=7 turns the co-purchase graph into one
+    # heavyweights with skew-sensitive shapes: hot l_partkey=7 turns the co-purchase graph into one
     # hub — the exact stress Suri–Vassilvitskii degree-ordering and the
     # C(basket,2) pair generation exist for; hot o_custkey=7 piles the
     # interval-island keyed windows onto one key.
@@ -69,8 +68,7 @@ PROBED = [
     "ext_interval_islands",          # keyed lag/sum windows by custkey
 ]
 
-# Text heavyweights probed on the content-side textskew axis (VERDICT r7
-# item 5): the key-hot axis mutates FK/group keys, which these are
+# Text heavyweights probed on the content-side textskew axis: the key-hot axis mutates FK/group keys, which these are
 # insensitive to by construction.
 PROBED_TEXT = [
     "ext_exact_substring_spans",     # hot seed hash owns ~90% of seeds
